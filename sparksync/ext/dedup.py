@@ -19,8 +19,6 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -122,95 +120,19 @@ def jaccard_pairs(
     the life of the returned plan because the anti-join reads it.
     Only compose this path into pipelines you will actually execute;
     the default (max_df=None) builds fully lazily."""
-    # Round 15 (guide §2.4 "two operations keyed the same way share
-    # one exchange"): the exploded index is repartitioned by the join
-    # key ONCE and pinned (features._pin, MEMORY_AND_DISK), so the
-    # self-join's two sides are co-partitioned reads of one cached
-    # relation — no per-side exchange, no per-consumer re-derivation
-    # (previously `sh` was derived 3x: both join sides + sizes).
-    # Interleaved idle A/B at sf0.1 (t=0.7, cache cleared per arm):
-    # 3.27 s -> 1.57 s median. This supersedes the earlier "no
-    # .cache()" note: the pin's storage cost equals the shuffle files
-    # the removed second exchange would have written anyway, it
-    # spills to disk past memory, and the FIFO registry bounds
-    # session accumulation; the trade now buys one exchange AND two
-    # tokenize passes per run.
-    # ADVICE r15 scale guard: the exploded index is ~10x the text, so
-    # at large corpora the pin would occupy the block manager and
-    # evict other FIFO-registered pins — gate it on the same
-    # env-parameterised pattern as graph._CC_LOCAL_MAX_EDGES
-    # (SPARKSYNC_JACCARD_INDEX_PIN=0 keeps the co-partitioning
-    # repartition but skips the cache; default on, the measured local
-    # win). jaccard_pairs itself is the gate-SF oracle form — the
-    # documented 100 TB pair path is MinHash LSH.
+    # The exploded index is repartitioned by the join key ONCE and
+    # pinned (features._pin, MEMORY_AND_DISK), so the self-join's two
+    # sides and `sizes` are co-partitioned reads of one cached relation:
+    # no per-side exchange, no per-consumer re-derivation. The pin
+    # costs what a second exchange's shuffle files would, and it spills
+    # to disk past memory. The index is ~10x the text, so this is the
+    # gate-SF oracle form; the documented 100 TB pair path is MinHash
+    # LSH.
     sh = shingles(df, id_col, text_col)
     from .features import _pin
 
-    sh = sh.repartition(F.col("shingle"))
-    if _os.environ.get("SPARKSYNC_JACCARD_INDEX_PIN", "1") != "0":
-        sh = _pin(sh)
+    sh = _pin(sh.repartition(F.col("shingle")))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    if (
-        _os.environ.get("SPARKSYNC_JACCARD_PREFIX", "0") == "1"
-        and max_df is None
-    ):
-        # A/B arm (round 16, VERDICT r15 #7): PPJoin-style prefix
-        # filtering — EXACT. Order every doc's shingles by (global
-        # document frequency asc, shingle asc); a pair with
-        # jacc >= t has overlap c >= t*n on each side, so indexing
-        # only each doc's first n - ceil(t*n) + 1 shingles under the
-        # shared total order still catches every qualifying pair
-        # (pigeonhole); candidates are verified against the full
-        # shingle sets with the same division, so values are
-        # identical. The -1e-9 keeps a float-inflated ceil(t*n) from
-        # shortening the prefix below the exact bound (prefix too
-        # LONG only costs candidates; too short loses pairs). The
-        # count join's sum(|posting|^2) term is replaced by
-        # sum(|rare-prefix posting|^2) + candidate verification —
-        # the trade that wins only at high posting-list density (the
-        # round-16 density probe rejected it as a default; see
-        # OPTIMIZATION_r16.md).
-        from pyspark.sql import Window
-
-        fr = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_gdf"))
-        w_doc = Window.partitionBy(id_col).orderBy("_gdf", "shingle")
-        pre = (
-            sh.join(fr, "shingle")
-            .withColumn("_rn", F.row_number().over(w_doc))
-            .join(sizes, id_col)
-            .where(
-                F.col("_rn")
-                <= F.col("n")
-                - F.ceil(F.col("n") * F.lit(threshold) - F.lit(1e-9))
-                + 1
-            )
-            .select(id_col, "shingle")
-        )
-        cand = _pin(
-            pre.select(F.col(id_col).alias("d1"), "shingle")
-            .join(pre.select(F.col(id_col).alias("d2"), "shingle"), "shingle")
-            .where(F.col("d1") < F.col("d2"))
-            .select("d1", "d2")
-            .distinct()
-        )
-        cand_ids = cand.select(
-            F.explode(F.array("d1", "d2")).alias(id_col)
-        ).distinct()
-        va = _pin(
-            sh.join(cand_ids, id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.collect_list("shingle").alias("_sh"))
-        )
-        s1 = va.select(F.col(id_col).alias("d1"), F.col("_sh").alias("_s1"))
-        s2 = va.select(F.col(id_col).alias("d2"), F.col("_sh").alias("_s2"))
-        inter = F.size(F.array_intersect("_s1", "_s2")).cast("double")
-        union = (F.size("_s1") + F.size("_s2")).cast("double") - inter
-        return (
-            cand.join(s1, "d1")
-            .join(s2, "d2")
-            .select("d1", "d2", (inter / union).alias("jacc"))
-            .where(F.col("jacc") >= threshold)
-        )
     join_sh = sh
     if max_df is not None:
         # hot set is heavy-hitter-bounded (<= total postings / max_df
@@ -1664,7 +1586,8 @@ def dedup_report(
         # checkpoint is LAZY and the size-probe count() materializes it
         # — one job does both (the count cannot prune through the RDD
         # barrier, so the blocks hold every column), and the count is
-        # forwarded so connected_components skips its own probe job.
+        # forwarded so connected_components skips its own probe job
+        # and edge pin.
         # (A pin UNDER the checkpoint — cross-run reuse of the
         # discovery with consumers still truncated — was A/B'd in
         # round 16 and regressed q199 warm ~20% (3.2 -> 4.0 s): the
@@ -1811,8 +1734,9 @@ def dedup_decision_report(
     # q204). Safe HERE because winnow_overlap_pairs' analyzed tree is
     # ~34 nodes — unlike dedup_report's minhash tree (~280 nodes),
     # where the same pin regressed planning time and the checkpoint
-    # stays (see dedup_report). connected_components recognizes the
-    # pinned graph (_plan_cached) and skips its redundant edge pin.
+    # stays (see dedup_report). Passing n_edges tells
+    # connected_components the graph is already materialized, so it
+    # skips its own edge pin.
     pairs, n_pairs = _materialize_pairs(pairs.select("d1", "d2"))
     comp = connected_components(pairs, "d1", "d2", n_edges=n_pairs)
     quality = df.select(
@@ -1857,8 +1781,8 @@ def _materialize_pairs(pairs: DataFrame) -> tuple[DataFrame, int]:
     broadcast semi-join and the matches join in _run_streaks; the
     components pass + cross-source rollup in dedup_decision_report)
     must not race an unmaterialized cache into recomputing the
-    discovery (the change-1 gotcha). connected_components recognizes
-    the pinned graph (_plan_cached) and skips its redundant
+    discovery. dedup_decision_report forwards the count as
+    connected_components' n_edges, which also skips its redundant
     edge-projection pin. NOT used by dedup_report: its minhash
     discovery tree is ~280 analyzed nodes, and pinning (instead of
     checkpointing) leaves that tree in every report consumer's plan —

@@ -9,13 +9,12 @@ graph diameter (near-dup clusters are shallow, so 2-4 in practice).
 
 Each round is one join + one groupBy, both shuffling on the node key;
 each round's labels are persisted and the convergence count is FUSED
-into the job that materializes them (one job per round, round 15 —
-was eager-checkpoint + count, two jobs). Lineage doubles every round
-(the join and the union both embed the previous round's plan), so
-every _TRUNC_EVERY-th round localCheckpoints eagerly to truncate the
-plan — without any truncation the driver OOMs just *printing* the
-plan past ~10 rounds. The previous round's blocks are explicitly
-unpersisted, so state never accumulates.
+into the job that materializes them (one job per round). Lineage
+doubles every round (the join and the union both embed the previous
+round's plan), so every _TRUNC_EVERY-th round localCheckpoints eagerly
+to truncate the plan — without any truncation the driver OOMs just
+*printing* the plan past ~10 rounds. The previous round's blocks are
+explicitly unpersisted, so state never accumulates.
 
 On a multi-node cluster localCheckpoint stores shuffle-output blocks on
 executors (lost with the executor); for very long-running jobs swap in
@@ -33,23 +32,16 @@ from pyspark.sql import functions as F
 # to truncate it, bounding plan depth at 2^_TRUNC_EVERY tiny subtrees
 _TRUNC_EVERY = 5
 
-# Size switch for the driver-local propagation path (round 15, guide
-# §1.2: the distributed loop costs ~12 Spark jobs under AQE per pass —
-# join + groupBy + fused count per round — which is pure fixed cost on
-# a small pair graph; a 256-edge graph measured ~1.0-1.2 s/pass at 32
-# cores). Graphs at or below this many edges are collected (bounded by
-# construction: the cap bounds the collect) and resolved by the SAME
-# synchronous min-label propagation in plain Python — identical
-# labels, identical round arithmetic, identical strict/max_iter
-# semantics — then returned as a local relation. Larger graphs take
-# the distributed loop unchanged. 2^16 edges ≈ 1 MB collected; scale
-# deployments can raise/lower via SPARKSYNC_CC_LOCAL_MAX_EDGES
-# (0 disables the local path entirely).
-import os as _os
-
-_CC_LOCAL_MAX_EDGES = int(
-    _os.environ.get("SPARKSYNC_CC_LOCAL_MAX_EDGES", str(1 << 16))
-)
+# Size switch for the driver-local propagation path: the distributed
+# loop costs ~12 Spark jobs under AQE per pass (join + groupBy + fused
+# count per round), which is pure fixed cost on a small pair graph.
+# Graphs at or below this many edges are collected (the cap bounds the
+# collect) and resolved by the SAME synchronous min-label propagation
+# in plain Python — identical labels, identical round arithmetic,
+# identical strict/max_iter semantics — then returned as a local
+# relation. Larger graphs take the distributed loop. 2^16 edges ≈ 1 MB
+# collected.
+_CC_LOCAL_MAX_EDGES = 1 << 16
 
 
 def _cc_local_label_type_ok(dt) -> bool:
@@ -138,76 +130,12 @@ def _release_checkpoint(df: DataFrame) -> None:
         df.unpersist()
 
 
-def _leaves_materialized(df: DataFrame) -> bool:
-    """True when every leaf of the analyzed plan is a LogicalRDD —
-    i.e. the input is already (local)checkpoint-backed and re-executing
-    it reads materialized blocks, so a cache pin over it would only
-    copy the data. Fails closed to False (pin): if the internal plan
-    probe breaks on a Spark upgrade, we degrade to a harmless extra
-    cache layer, never to re-running a discovery pipeline."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        n = leaves.size()
-        if n == 0:
-            return False
-        for i in range(n):
-            if leaves.apply(i).getClass().getSimpleName() != "LogicalRDD":
-                return False
-        return True
-    except Exception:
-        return False
-
-
-def _plan_cached(df: DataFrame) -> bool:
-    """True when this exact plan is already a cache-manager entry (a
-    caller-side pin: dedup_report et al. pin their pair graph before
-    passing it down, round 15): re-executing it reads cached batches,
-    so the edge-projection pin below would only copy pair-cardinality
-    rows and churn the FIFO registry — the same reason the
-    checkpoint-backed case skips it. Fails closed to False (pin)."""
-    from .features import _cached_data
-
-    return _cached_data(df) is not None
-
-
-def _materialize(df: DataFrame, mode: str) -> DataFrame:
-    """Round materialization for the propagation loop's TRUNCATION
-    rounds. 'local' (the default and the scale path) eagerly
-    localCheckpoints: lineage is TRUNCATED, so the per-round plan
-    stays flat no matter how many rounds run. 'persist' caches
-    MEMORY_AND_DISK + count()s: no checkpoint I/O, but lineage is
-    kept — and each round references the previous round's plan twice
-    (self-rows + messages), so the plan tree grows geometrically; only
-    sane for shallow graphs (near-dup clusters converge in 2-4
-    rounds). The knob exists so the checkpoint-I/O share of the
-    loop's wall time can be A/B-measured (VERDICT r11 #4 watch item),
-    not as a recommendation.
-
-    Round 15: ordinary rounds no longer call this at all — they ride
-    the FUSED persist+convergence-count path (one job per round, see
-    connected_components); _materialize runs only every
-    _TRUNC_EVERY-th round ('local') or under ckpt_mode='persist'."""
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        return df
-    if mode != "local":
-        # the knob exists for A/B measurement — a typo'd mode silently
-        # measuring the wrong arm corrupts the comparison (code-review
-        # r12; matches sampling._bucket's unknown-method precedent)
-        raise ValueError(f"unknown ckpt_mode {mode!r} (local | persist)")
-    return df.localCheckpoint(eager=True)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "d1",
     dst: str = "d2",
     max_iter: int = 20,
     strict: bool = True,
-    ckpt_mode: str = "local",
     n_edges: int | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in `edges`, where
@@ -218,88 +146,54 @@ def connected_components(
     minimum — <= diameter hops. Initialization folds the first hop
     into label creation (min(self, neighbors) in the same groupBy that
     builds the node list), and each round performs ONE hop before its
-    checkpoint + convergence check, so max_iter rounds cover
-    max_iter+1 hops. Round 7 tried TWO hops per round on the theory
-    that per-round fixed costs dominate; the idle A/B at sf0.1 said
-    the opposite (q159 6.07 s vs 5.32 s — each round paid a second
-    join+agg and a wider aggregate that the saved checkpoint jobs
-    never earned back, VERDICT r7 #3), so round 8 reverted to one hop
-    while keeping the two cheap round-7 wins: the folded init and the
-    join-free convergence check (the old label rides the aggregation
-    on each node's unique self row, so counting changed labels scans
-    the materialized blocks instead of re-joining two label sets).
-    If the loop exhausts max_iter while labels are still changing the
-    result is WRONG (partially-merged components), so strict=True
-    (default) raises instead of silently returning it; strict=False
-    logs a warning and returns the non-converged labels for callers
-    that prefer partial merges over failure.
+    convergence check, so max_iter rounds cover max_iter+1 hops. The
+    check is join-free: the old label rides the aggregation on each
+    node's unique self row, so counting changed labels scans the
+    materialized blocks instead of re-joining two label sets. If the
+    loop exhausts max_iter while labels are still changing the result
+    is WRONG (partially-merged components), so strict=True (default)
+    raises instead of silently returning it; strict=False logs a
+    warning and returns the non-converged labels for callers that
+    prefer partial merges over failure.
 
-    Round 15 (guide §1.2 "per-task work" / fixed-cost trim): ordinary
-    rounds are FUSED — the round result is lazily persisted
+    Ordinary rounds are FUSED: the round result is lazily persisted
     (MEMORY_AND_DISK) and the convergence count is the SAME job that
-    materializes it, so a round costs ONE Spark job instead of the
-    previous two (eager-checkpoint job + count job). Idle A/B at
-    sf0.1 over a prebuilt exact-Jaccard pair graph: 0.61 s -> 0.32 s
-    per components pass (median of 4), and the change multiplies
-    across the ~10 capstones that run a components pass per
-    invocation. Lineage: a persisted round references the previous
-    round's plan (cache-backed at EXECUTION, but the LOGICAL plan
-    doubles per round since self-rows + messages both embed it), so
-    every _TRUNC_EVERY-th round still localCheckpoints eagerly —
-    plan depth stays bounded by 2^_TRUNC_EVERY tiny subtrees at any
-    iteration count, and the old geometric-blowup failure mode
-    (driver OOM printing the plan past ~10 rounds) cannot return.
-    ckpt_mode='persist' keeps its documented meaning (never
-    truncate, the A/B arm)."""
+    materializes it, so a round costs one Spark job. A persisted round
+    references the previous round's plan (the LOGICAL plan doubles per
+    round since self-rows + messages both embed it), so every
+    _TRUNC_EVERY-th round localCheckpoints eagerly instead: plan depth
+    stays bounded by 2^_TRUNC_EVERY tiny subtrees at any iteration
+    count.
+
+    `n_edges` is the row count of an ALREADY-MATERIALIZED `edges`
+    (checkpointed or pinned by the caller). When given, `edges` is read
+    directly: the size-probe job and the edge-projection pin are both
+    skipped. Pass it only with a materialized graph — a lazy discovery
+    plan would then re-run once per consumer — and only with the real
+    row count, which bounds the driver-local collect."""
     from pyspark import StorageLevel
 
-    # materialize the undirected pair graph ONCE, EAGERLY: `edges` is
-    # typically a whole discovery pipeline (minhash LSH banding +
-    # verify, cosine scoring, ...), and every propagation round below
-    # reads `und` — an un-checkpointed plan would re-run that pipeline
-    # per round (found via the round-6 bench: q159 spent ~6 of its
-    # 7.9 s re-deriving pairs each iteration). The eager checkpoint
-    # also TRUNCATES the discovery plan out of every round's lineage —
-    # a lazy persist here was measured 4x SLOWER on q178 (round-15
-    # A/B): the RP-LSH discovery's large expression tree rode into
-    # every fused round's analysis, and concurrent scans of the
-    # not-yet-materialized cache raced re-computing the discovery.
-    # Pair-graph rows are pair-cardinality, tiny next to the corpus.
-    if ckpt_mode not in ("local", "persist"):
-        raise ValueError(f"unknown ckpt_mode {ckpt_mode!r} (local | persist)")
-    # the (src, dst) projection is pinned BEFORE the two-way union:
-    # both union branches then read one cached relation instead of
-    # each executing the discovery pipeline — the checkpoint job runs
-    # the discovery once, not twice (the q20 band-row pin pattern;
-    # pair-cardinality rows, tiny at any scale). The pin also lets a
-    # bench/batch session re-running the identical plan reuse the
-    # materialized discovery, with the cold cost visible in first_run.
-    # Callers that already materialized their pair graph (dedup_report
-    # et al. localCheckpoint pairs before passing them — every leaf is
-    # then a LogicalRDD) skip the pin: caching a checkpoint scan only
-    # adds a copy and churns the FIFO registry (measured +0.8 s on
-    # q199, round-15 A/B).
+    # A lazy `edges` is typically a whole discovery pipeline (minhash
+    # LSH banding + verify, cosine scoring, ...), so its (src, dst)
+    # projection is pinned BEFORE the two-way union: both union
+    # branches then read one cached relation and the discovery runs
+    # once, not twice (pair-cardinality rows, tiny at any scale).
+    # A materialized graph (n_edges given) is read as is: caching a
+    # checkpoint scan or an existing pin only adds a copy and churns
+    # the FIFO registry.
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e_pinned = False
-    if not (_leaves_materialized(edges) or _plan_cached(edges)):
+    e_pinned = n_edges is None
+    if e_pinned:
         from .features import _pin
 
         e = _pin(e)
-        e_pinned = True
     und_plan = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    if ckpt_mode == "local" and _CC_LOCAL_MAX_EDGES > 0:
-        # the count doubles as the pin/checkpoint materialization the
-        # und checkpoint below would otherwise perform, so the big-graph
-        # path pays only a cached-count probe for the size switch.
-        # n_edges (round 16): callers that already counted the
-        # materialized pair graph (dedup_report fuses its checkpoint
-        # materialization with a count; _materialize_pairs counts to
-        # pin) pass the number in and this probe job is skipped — a
-        # WRONG hint would only mis-route between two label-identical
-        # paths, but the collect bound below still depends on it, so
-        # it must be the real row count of `edges`.
+    if _CC_LOCAL_MAX_EDGES > 0:
+        # the count doubles as the pin materialization, so the
+        # big-graph path pays only a cached-count probe for the size
+        # switch
         if n_edges is None:
             n_edges = e.count()
         if n_edges <= _CC_LOCAL_MAX_EDGES and _cc_local_label_type_ok(
@@ -313,8 +207,7 @@ def connected_components(
                 # without it consumers' INITIAL plans pick SortMergeJoin
                 # against the LocalRelation — AQE converts back to
                 # broadcast at runtime but only after the corpus side's
-                # shuffle map stage already ran (measured +0.2-0.3 s on
-                # q204, round-15 A/B)
+                # shuffle map stage already ran
                 local = F.broadcast(
                     _local_components(
                         rows,
@@ -327,12 +220,18 @@ def connected_components(
                 # the pinned edge projection was only probed/collected;
                 # nothing reads it again — drop the cache blocks now
                 # instead of waiting for the FIFO registry to age them
-                # out (ADVICE r15; the registry's later unpersist of
-                # the same df is a no-op)
+                # out (the registry's later unpersist of the same df is
+                # a no-op)
                 if e_pinned:
                     e.unpersist(False)
                 return local
-    und = _materialize(und_plan, ckpt_mode)
+    # materialize the undirected pair graph ONCE, EAGERLY: every
+    # propagation round below reads `und`, and the checkpoint also
+    # TRUNCATES the discovery plan out of every round's lineage (a lazy
+    # persist here kept the discovery's expression tree in every fused
+    # round's analysis, and concurrent scans of the not-yet-built cache
+    # raced into re-computing the discovery).
+    und = und_plan.localCheckpoint(eager=True)
     # init folds the FIRST propagation hop into label creation: every
     # node starts at min(self, min neighbor) — one groupBy instead of a
     # distinct + a full first round (round-7 fixed-cost trim). Lazy
@@ -364,17 +263,17 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"), F.max("old").alias("old"))
         )
-        truncate = ckpt_mode == "local" and rounds % _TRUNC_EVERY == 0
+        truncate = rounds % _TRUNC_EVERY == 0
         if truncate:
-            # periodic lineage truncation round: the old two-job shape
-            stepped = _materialize(stepped, ckpt_mode)
-            changed = stepped.where(F.col("label") != F.col("old")).count()
+            # periodic lineage truncation round: checkpoint, then count
+            stepped = stepped.localCheckpoint(eager=True)
         else:
-            # fused round: ONE job materializes the cache AND returns
-            # the convergence count (the filter scans every partition,
-            # so the InMemoryRelation is fully built by this count)
+            # fused round: the count below is the ONE job that both
+            # materializes the cache and returns the convergence count
+            # (the filter scans every partition, so the InMemoryRelation
+            # is fully built by it)
             stepped = stepped.persist(StorageLevel.MEMORY_AND_DISK)
-            changed = stepped.where(F.col("label") != F.col("old")).count()
+        changed = stepped.where(F.col("label") != F.col("old")).count()
         # old round's blocks are never read again (stepped is already
         # materialized), so dropping them is safe. Release the df that
         # HOLDS the blocks, not the projection over it.
@@ -420,8 +319,9 @@ def dedup_groups(
     canonical (minimum-id) member of its duplicate group. Feed any pair
     list (jaccard, minhash, simhash, embedding LSH); docs absent from
     `pairs` are their own canonical and need no row. `n_edges`: the
-    known row count of `pairs`, forwarded to connected_components so
-    its size-switch probe job is skipped."""
+    row count of an already-materialized `pairs`, forwarded to
+    connected_components (which then skips its size-probe job and edge
+    pin)."""
     cc = connected_components(pairs, id_col, id2_col, n_edges=n_edges)
     return cc.select(F.col("node").alias("doc_id"), F.col("component").alias("keep_id"))
 

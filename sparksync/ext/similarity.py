@@ -462,10 +462,10 @@ def _assign(e: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
     array folds per row instead of 3K. The arithmetic is bit-identical
     (dot / (norm(v) * norm(cv)): the same float ops in the same order,
     just not recomputed), so the picked centroid cannot move. The
-    four-arm interleaved A/B on a 1M-row replicated corpus
-    (tools/ab_assign_r16b.py): window 18.3/9.8/8.1/4.3 s, fold+hoist
-    8.8/4.5/4.1/3.7 s, with row-identical output on the fixture AND on
-    adversarial NaN/null-vector/exact-tie inputs.
+    four-arm interleaved A/B on a 1M-row replicated corpus: window
+    18.3/9.8/8.1/4.3 s, fold+hoist 8.8/4.5/4.1/3.7 s, with
+    row-identical output on the fixture AND on adversarial
+    NaN/null-vector/exact-tie inputs.
 
     Equivalence to the window's (cos DESC, cid ASC) pick, exactly:
     array_max compares struct(cos, -cid) with the SAME interpreted

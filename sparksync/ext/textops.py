@@ -994,12 +994,12 @@ _BPE_SEP = "\x1f"
 # role in the components loop)
 _BPE_TRUNC_EVERY = 5
 
-# Size switch for the driver-local BPE merge loop (round 16, VERDICT
-# r15 #5; the graph._CC_LOCAL_MAX_EDGES pattern): the distributed loop
-# costs one argmax job + a 1-row collect PER MERGE — pure fixed cost
-# when the encoded vocabulary is small. Vocabularies at or below this
-# many rows are collected once (bounded by the cap; the encoded string
-# is ~3x the word, so 2^16 rows is a few MB) and the SAME
+# Size switch for the driver-local BPE merge loop (the
+# graph._CC_LOCAL_MAX_EDGES pattern): the distributed loop costs one
+# argmax job + a 1-row collect PER MERGE — pure fixed cost when the
+# encoded vocabulary is small. Vocabularies at or below this many rows
+# are collected once (bounded by the cap; the encoded string is ~3x
+# the word, so 2^16 rows is a few MB) and the SAME
 # argmax-merge-recount loop runs in plain Python: identical pair
 # counts (exact integer sums), identical (cnt desc, l, r) tie-break
 # (Python's code-point string order == Spark's UTF8_BINARY byte
@@ -1007,12 +1007,7 @@ _BPE_TRUNC_EVERY = 5
 # both leftmost-nonoverlapping on the doubled-separator encoding).
 # Larger vocabularies take the distributed loop unchanged; at 100 TB
 # the word vocabulary exceeds the cap and the local path is inert.
-# Env-tunable; 0 disables.
-import os as _os
-
-_BPE_LOCAL_MAX_VOCAB = int(
-    _os.environ.get("SPARKSYNC_BPE_LOCAL_MAX_VOCAB", str(1 << 16))
-)
+_BPE_LOCAL_MAX_VOCAB = 1 << 16
 
 
 def _local_bpe_merges(
@@ -1748,23 +1743,6 @@ def lm_vocab_census(
     )
 
 
-# A/B switch for _lm_base's round-15 pin (True = production shape).
-# Flipped only by tools/ab harnesses to reproduce the old all-lazy arm.
-_LM_PIN = True
-
-# A/B arm (round 16, VERDICT r15 #7): _lm_base's bigram table built
-# from array-side adjacent pairs + two broadcast vocab joins instead
-# of the per-token lead() window — the form round 15 rejected at
-# sf0.1 (2.39 -> 2.91 s) with the note that its shuffle is per-doc
-# bigram TYPES while the window's is the raw token stream, so it
-# could win at real scale. Round 16 re-adjudicated it on the
-# synthesized sf1 decade (interleaved, committed table in
-# OPTIMIZATION_r16.md) — it LOST there too, so the window form stays
-# production and this flag exists only for the env-driven A/B
-# (SPARKSYNC_LM_ARRAY_BIGRAMS=1).
-_LM_ARRAY_BIGRAMS = _os.environ.get("SPARKSYNC_LM_ARRAY_BIGRAMS", "0") == "1"
-
-
 def _lm_base(
     df: DataFrame,
     text_col: str,
@@ -1803,9 +1781,7 @@ def _lm_base(
     shuffle the c12 aggregation writes from those rows anyway (the
     change-2 trade) — and the census is <= vocab_k rows. Warm runs
     (the bench's median-of-3, or any session re-scoring the same
-    corpus) reuse both pins; cold cost stays visible in first_run.
-    `_LM_PIN` exists for the A/B harness (False = the old all-lazy
-    shape)."""
+    corpus) reuse both pins; cold cost stays visible in first_run."""
     keep = [F.col(id_col)]
     gcols = [id_col]
     if flag is not None:
@@ -1818,72 +1794,11 @@ def _lm_base(
     vocab = lm_vocab_census(df, vocab_k, text_col, n_salts).select(
         F.col("tok").alias("_tok")
     )
-    if _LM_PIN:
-        from .features import _pin
+    from .features import _pin
 
-        # materialized as a side effect of big.count() below (the
-        # census is a subtree of `big`'s plan), so no dedicated job
-        vocab = _pin(vocab)
-    if _LM_ARRAY_BIGRAMS:
-        # A/B arm (see the flag note): bigrams assembled array-side and
-        # '<unk>'-mapped by two broadcast vocab joins over the exploded
-        # PAIRS — no per-doc window shuffle; stats come from a separate
-        # token-explode aggregate (two tokenize passes instead of one
-        # pinned table, the arm's structural cost)
-        from .features import _pin as _pin_b
-
-        nn = F.size("_toks")
-        raw = F.zip_with(
-            F.slice(F.col("_toks"), 1, nn - 1),
-            F.slice(F.col("_toks"), 2, nn - 1),
-            lambda a, b: F.struct(a.alias("rw"), b.alias("rw2")),
-        )
-        ex = d2.select(*gcols, F.explode(raw).alias("_p")).select(
-            *gcols,
-            F.col("_p.rw").alias("_rw"),
-            F.col("_p.rw2").alias("_rw2"),
-        )
-        m1 = F.broadcast(
-            vocab.select(F.col("_tok").alias("_rw"), F.lit(1).alias("_v1"))
-        )
-        m2 = F.broadcast(
-            vocab.select(F.col("_tok").alias("_rw2"), F.lit(1).alias("_v2"))
-        )
-        big2 = (
-            ex.join(m1, "_rw", "left")
-            .join(m2, "_rw2", "left")
-            .select(
-                *gcols,
-                F.when(F.col("_v1") == 1, F.col("_rw"))
-                .otherwise(F.lit("<unk>"))
-                .alias("_w"),
-                F.when(F.col("_v2") == 1, F.col("_rw2"))
-                .otherwise(F.lit("<unk>"))
-                .alias("_w2"),
-            )
-        )
-        if _LM_PIN:
-            big2 = _pin_b(big2)
-            big2.count()
-        types = big2.groupBy(*gcols, "_w", "_w2").agg(
-            F.count(F.lit(1)).cast("long").alias("_k")
-        )
-        stats = (
-            tok.join(
-                F.broadcast(vocab.withColumn("_v", F.lit(1))), "_tok", "left"
-            )
-            .groupBy(*gcols)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_tokens"),
-                F.sum(F.col("_v").isNull().cast("long"))
-                .cast("long")
-                .alias("n_unk"),
-            )
-        )
-        veff = vocab.groupBy().agg(
-            (F.count(F.lit(1)) + F.lit(1)).cast("long").alias("_veff")
-        )
-        return stats, types, veff
+    # materialized as a side effect of big.count() below (the census is
+    # a subtree of `big`'s plan), so no dedicated job
+    vocab = _pin(vocab)
     mapped = tok.join(
         F.broadcast(vocab.withColumn("_v", F.lit(1))), "_tok", "left"
     ).select(
@@ -1894,12 +1809,8 @@ def _lm_base(
         .alias("_w"),
     )
     w_doc = Window.partitionBy(id_col).orderBy("_pos")
-    big = mapped.withColumn("_w2", F.lead("_w").over(w_doc))
-    if _LM_PIN:
-        from .features import _pin
-
-        big = _pin(big)
-        big.count()
+    big = _pin(mapped.withColumn("_w2", F.lead("_w").over(w_doc)))
+    big.count()
     stats = big.groupBy(*gcols).agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.sum((F.col("_w") == "<unk>").cast("long")).cast("long").alias("n_unk"),
@@ -2263,9 +2174,14 @@ def lm_score_against_model(
     with one localCheckpoint when the plan is BUILT, so a lazy counts
     pipeline executes once here instead of once per consumer (context
     table + model projection) — the same build-time contract as
-    ngram_lm_score / lm_target_affinity."""
+    ngram_lm_score / lm_target_affinity.
+
+    `vocab` is deduplicated at entry (order-preserving), the same
+    contract as lm_bigram_counts: a duplicated token would inflate
+    V_eff and, on the join path, multiply bigram rows."""
     if mode not in ("ln", "fixed"):
         raise ValueError(f"lm_score_against_model: unknown mode {mode!r}")
+    vocab = list(dict.fromkeys(vocab))
     scale = 1 << scale_bits
     cap = ((1 << 63) - 1) >> scale_bits
     veff = len(vocab) + 1

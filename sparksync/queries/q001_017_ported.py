@@ -1,7 +1,6 @@
 """Ported surface: the reference's emitted-SQL semantics (SURVEY 2.5 Q1-Q15) re-expressed as DataFrame plans.
 
-Verbatim slice of the pre-split sparksync/queries.py (band q001-q017);
-see tools/split_queries.py for the mechanical provenance.
+Verbatim slice of the pre-split sparksync/queries.py (band q001-q017).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """First LLM-pipeline extensions: exact/minhash/simhash dedup, kNN/IVF similarity, text quality, temporal ops.
 
-Verbatim slice of the pre-split sparksync/queries.py (band q018-q049);
-see tools/split_queries.py for the mechanical provenance.
+Verbatim slice of the pre-split sparksync/queries.py (band q018-q049).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Corpus-prep compositions: prep pipeline, splits/sampling/packing, TF-IDF/BM25, PII, spans, mixing.
 
-Verbatim slice of the pre-split sparksync/queries.py (band q050-q099);
-see tools/split_queries.py for the mechanical provenance.
+Verbatim slice of the pre-split sparksync/queries.py (band q050-q099).
 """
 
 from __future__ import annotations

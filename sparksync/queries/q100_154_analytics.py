@@ -1,7 +1,6 @@
 """Analytics/audit band: edit-distance joins, RFM, embedding health, drift, profiling, layout pricing.
 
-Verbatim slice of the pre-split sparksync/queries.py (band q100-q154);
-see tools/split_queries.py for the mechanical provenance.
+Verbatim slice of the pre-split sparksync/queries.py (band q100-q154).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Dedup capstones: cluster keepers, survivorship, HLL, z-order, semantic dedup, the composed dedup report.
 
-Verbatim slice of the pre-split sparksync/queries.py (band q155-q199);
-see tools/split_queries.py for the mechanical provenance.
+Verbatim slice of the pre-split sparksync/queries.py (band q155-q199).
 """
 
 from __future__ import annotations

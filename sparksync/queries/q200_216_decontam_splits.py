@@ -1,7 +1,6 @@
 """Decontamination + split governance: LM surprisal/DSIR, winnowing, shared-run trims, leakage-safe splits, caps.
 
-Verbatim slice of the pre-split sparksync/queries.py (band q200-q216);
-see tools/split_queries.py for the mechanical provenance.
+Verbatim slice of the pre-split sparksync/queries.py (band q200-q216).
 """
 
 from __future__ import annotations

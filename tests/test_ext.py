@@ -3779,43 +3779,18 @@ def test_jaccard_pairs_max_df_hostile(spark):
     assert twin_row.jacc <= exact[(n, n + 1)] + 1e-12
     # unset cap keeps exact semantics (no warning path, identical set)
     assert set(exact) == {(n, n + 1)}
-
-
-def test_jaccard_pairs_prefix_filter_exact(spark, monkeypatch):
-    """Round 16 (VERDICT r15 #7): the env-gated PPJoin prefix-filter
-    arm (SPARKSYNC_JACCARD_PREFIX=1) is EXACT — row-identical to the
-    inverted-index count join, jacc values included — on a
-    boilerplate-heavy corpus (the pathology it exists for: common
-    shingles' posting lists are the whole corpus, but freq-ordered
-    prefixes never index them) at two thresholds. max_df composes with
-    the base arm only; the flag is ignored when max_df is set."""
-    from sparksync.ext import dedup as dd
-    from sparksync.ext import features
-
+    # several hot shingles per doc (a 6-token boilerplate header): the
+    # cap prunes all of them and still keeps exactly the twins
     n = 60
     rows = [
         (i, f"hot1 hot2 hot3 hot4 hot5 hot6 u{i}a u{i}b u{i}c u{i}d", "s")
         for i in range(n)
     ]
-    twin = "hot1 hot2 hot3 " + " ".join(f"tw{j}" for j in range(16))
     rows += [(n, twin, "s"), (n + 1, twin + " extra", "s")]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    for t in (0.7, 0.8):
-        monkeypatch.delenv("SPARKSYNC_JACCARD_PREFIX", raising=False)
-        base = sorted(map(tuple, dd.jaccard_pairs(df, t).collect()))
-        features.release_pinned()
-        monkeypatch.setenv("SPARKSYNC_JACCARD_PREFIX", "1")
-        pre = sorted(map(tuple, dd.jaccard_pairs(df, t).collect()))
-        features.release_pinned()
-        assert pre == base, t
-        assert len(base) >= 1  # the twins qualify at both thresholds
-    # with max_df set, the flag must not change the capped semantics
-    import pytest as pt
-
     with pt.warns(UserWarning, match="pruned"):
         capped = {(r.d1, r.d2) for r in dd.jaccard_pairs(df, 0.8, max_df=10).collect()}
     assert capped == {(n, n + 1)}
-    features.release_pinned()
 
 
 def test_mp3_mp4_metadata_parsers(spark):
@@ -4959,6 +4934,39 @@ def test_lm_score_against_model_held_out_drift(spark):
     assert ppl[101] > ppl[100] >= 1.0
 
 
+def test_lm_score_against_model_dedupes_vocab(spark, monkeypatch):
+    """A vocab with one token listed twice scores exactly like the
+    clean list on both mapping paths: duplicates must neither inflate
+    V_eff nor, on the broadcast-join path, multiply bigram rows."""
+    from sparksync.ext import textops
+
+    train = spark.createDataFrame(
+        [(i, "alpha beta gamma delta alpha beta") for i in range(10)],
+        "doc_id long, text string",
+    )
+    vocab = ["alpha", "beta", "delta", "gamma"]
+    counts = textops.lm_bigram_counts(train, vocab)
+    probe = spark.createDataFrame(
+        [(100, "alpha beta gamma delta alpha beta"),
+         (101, "beta zz beta alpha qq")],
+        "doc_id long, text string",
+    )
+
+    def score(v):
+        return {
+            tuple(r)
+            for r in textops.lm_score_against_model(
+                probe, counts, v, mode="fixed", limit=10
+            ).collect()
+        }
+
+    for threshold in (textops.LM_VOCAB_JOIN_THRESHOLD, 0):
+        monkeypatch.setattr(textops, "LM_VOCAB_JOIN_THRESHOLD", threshold)
+        clean = score(vocab)
+        assert len(clean) == 2, threshold
+        assert score(vocab[:2] + ["beta"] + vocab[2:]) == clean, threshold
+
+
 def test_lm_score_against_model_branch_parity_large_vocab(docs, monkeypatch):
     """Round 16: the large-vocab (broadcast-join) branch derives
     (n_tokens, n_unk) from the fused bigram types + a last-token
@@ -5890,26 +5898,43 @@ def test_trim_family_until_fixpoint(spark):
     assert fx[2] == (6, 6, "")
 
 
-def test_connected_components_persist_mode(spark):
-    """The ckpt_mode='persist' A/B knob (VERDICT r11 #4 watch) must
-    produce identical labels to the default localCheckpoint loop on a
-    multi-round graph (a 6-chain needs >1 propagation round)."""
-    from sparksync.ext.graph import connected_components
+def test_connected_components_n_edges_contract(spark, monkeypatch):
+    """`n_edges` means "edges is already materialized": a
+    localCheckpoint'ed pair graph handed in with its row count is read
+    as is (no edge pin), the same graph passed as a lazy plan without
+    it is pinned exactly once, and the labels are identical — on the
+    driver-local path and on the distributed loop (a 16-chain runs
+    past a lineage-truncation round)."""
+    from sparksync.ext import features, graph
 
-    chain = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)],
-        "d1 long, d2 long",
-    )
-    want = {
-        (r.node, r.component)
-        for r in connected_components(chain).collect()
-    }
-    got = {
-        (r.node, r.component)
-        for r in connected_components(chain, ckpt_mode="persist").collect()
-    }
-    assert got == want
-    assert {c for _, c in got} == {1, 10}
+    pins = []
+    real_pin = features._pin
+
+    def counting_pin(df):
+        pins.append(df)
+        return real_pin(df)
+
+    monkeypatch.setattr(features, "_pin", counting_pin)
+    rows = [(i, i + 1) for i in range(1, 16)] + [(40, 41), (41, 42)]
+    lazy = spark.createDataFrame(rows, "d1 long, d2 long")
+    ckpt = lazy.localCheckpoint(eager=True)
+    for cap in (1 << 16, 0):
+        monkeypatch.setattr(graph, "_CC_LOCAL_MAX_EDGES", cap)
+        pins.clear()
+        got_ckpt = {
+            tuple(r)
+            for r in graph.connected_components(
+                ckpt, n_edges=len(rows)
+            ).collect()
+        }
+        assert len(pins) == 0, cap
+        got_lazy = {
+            tuple(r) for r in graph.connected_components(lazy).collect()
+        }
+        assert len(pins) == 1, cap
+        assert got_ckpt == got_lazy, cap
+        assert {c for _, c in got_lazy} == {1, 40}
+    features.release_pinned()
 
 
 def test_connected_components_local_path_parity(spark, monkeypatch):
@@ -6133,21 +6158,16 @@ def test_split_leakage_audit_and_leakage_safe_zero(spark):
 
 
 def test_r12_review_hardening(spark):
-    """code-review r12 pack: unknown ckpt_mode raises (a typo'd A/B
-    must not silently measure the wrong arm); leakage_safe_split
-    tolerates an input df that already carries a 'component' column;
-    asof's orderability check is an allowlist, so an array-of-map
-    right value takes the hash fallback instead of throwing."""
-    import pytest as _pytest
+    """Hardening pack: leakage_safe_split tolerates an input df that
+    already carries a 'component' column; asof's orderability check is
+    an allowlist, so an array-of-map right value takes the hash
+    fallback instead of throwing."""
     from pyspark.sql import Row
 
     from sparksync.ext.asof import asof_join
-    from sparksync.ext.graph import connected_components
     from sparksync.ext.sampling import leakage_safe_split
 
     pairs = spark.createDataFrame([(1, 2)], "d1 long, d2 long")
-    with _pytest.raises(ValueError, match="ckpt_mode"):
-        connected_components(pairs, ckpt_mode="Persist").collect()
     docs = spark.createDataFrame(
         [(1, "x"), (2, "y"), (3, "z")], "doc_id long, component string"
     )
@@ -7078,7 +7098,7 @@ def test_bpe_train_matches_python_model(spark):
 
 def test_bpe_train_local_path_parity(spark, monkeypatch):
     """Round 16: the driver-local merge loop (vocabularies under
-    SPARKSYNC_BPE_LOCAL_MAX_VOCAB are collected and merged in Python)
+    _BPE_LOCAL_MAX_VOCAB rows are collected and merged in Python)
     returns the IDENTICAL merge table to the distributed argmax loop —
     including greedy-overlap shapes ('a a a a a'), lexicographic ties,
     multi-char later merges and the pairs-run-dry break. Over-cap (or

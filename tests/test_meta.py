@@ -1,8 +1,8 @@
 """Repo-hygiene meta-tests (VERDICT r5 #2/#3): every public extension
 function must be reachable from a gate query or a test (no dark code),
-and the committed selfcheck sweep logs must cover exactly the
-registered query surface (the scale-reverification discipline cannot
-silently lapse again)."""
+no extension module reads the environment, and the committed selfcheck
+sweep logs must cover exactly the registered query surface (the
+scale-reverification discipline cannot silently lapse again)."""
 
 from __future__ import annotations
 
@@ -77,6 +77,26 @@ def test_no_dark_ext_functions():
                 changed = True
     dark = sorted(public - reachable)
     assert dark == [], f"ungated/untested public ext functions: {dark}"
+
+
+def test_ext_reads_no_environment():
+    """No operator in sparksync/ext/ reads an environment variable
+    (os.environ / os.getenv through any alias, or imported from os):
+    each operator has one code path, so an env-gated arm or tuning
+    knob cannot come back unnoticed. Deployment settings belong in
+    session.py, outside ext/."""
+    env = {"environ", "environb", "getenv", "getenvb"}
+    hits = []
+    for mod in sorted(EXT.glob("*.py")):
+        for node in ast.walk(ast.parse(mod.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in env:
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                names = [a.name for a in node.names if a.name in env]
+            else:
+                continue
+            hits += [f"{mod.name}:{node.lineno} {n}" for n in names]
+    assert hits == [], f"environment reads in sparksync/ext: {hits}"
 
 
 def _latest_sweep_logs():
