@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .ddl import FkSpec, IndexSpec
+from .session import local_frame
 from .typemap import OracleColumn, TableSpec
 
 CORE_TABLES = [
@@ -258,7 +259,7 @@ class FixtureCatalog:
             "nullable string, data_default string, comments string,"
             "avg_col_len int, column_id int"
         )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def column_count(self, table: str) -> int:
         """S7 (tablemeta.go:64-72): the reference's existence probe /

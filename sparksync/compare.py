@@ -19,6 +19,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 @dataclass
 class CompareResult:
@@ -361,8 +363,10 @@ def schema_diff(src: DataFrame, dst: DataFrame) -> DataFrame:
             rows.append((c, s[c], d[c], "retyped"))
         else:
             rows.append((c, s[c], d[c], "ok"))
-    return src.sparkSession.createDataFrame(
-        rows, "col_name string, src_type string, dst_type string, status string"
+    return local_frame(
+        src.sparkSession,
+        rows,
+        "col_name string, src_type string, dst_type string, status string",
     )
 
 

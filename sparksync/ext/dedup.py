@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import local_frame
 from .textops import tokens
 
 SHINGLE_N = 3
@@ -215,15 +216,14 @@ def minhash_signatures(
     inside minhash_dedup_pairs (2.8s -> 5.2s at sf0.1): both banded
     join sides re-run the 64 array folds, while this formulation's
     map-side combine makes the re-scan cheap. Keep the explode+groupBy."""
-    mask32 = F.lit(0xFFFFFFFF)
     base = sh.select(
         F.col(id_col),
-        F.xxhash64(F.col("shingle")).bitwiseAND(mask32).alias("_x"),
+        F.xxhash64(F.col("shingle")).bitwiseAND(F.lit(0xFFFFFFFF)).alias("_x"),
     )
+    # one parsed expression per aggregate: a Column tree costs one py4j
+    # round trip per node, a SQL string one per aggregate
     mins = [
-        F.min(
-            (F.lit(a) * F.col("_x") + F.lit(b)).bitwiseAND(mask32)
-        ).alias(f"h{i}")
+        F.expr(f"min((({a} * _x) + {b}) & {0xFFFFFFFF}) AS h{i}")
         for i, (a, b) in enumerate(_mh_consts(k))
     ]
     return base.groupBy(id_col).agg(*mins)
@@ -238,25 +238,27 @@ def _band_buckets(
     buckets can be re-split by the following band (see
     _cap_buckets)."""
 
-    def band_key(b: int) -> F.Column:
-        return F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
+    def band_key(b: int) -> str:
+        cols = ", ".join(f"h{b * rows + r}" for r in range(rows))
+        return f"xxhash64({cols})"
 
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_key(b).alias("key"),
-                band_key((b + 1) % bands).alias("nxt"),
-            )
+    band_keys = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, 'key', {band_key(b)},"
+            f" 'nxt', {band_key((b + 1) % bands)})"
             for b in range(bands)
-        ]
+        )
+        + ")"
     )
     # sigall = one hash of the FULL signature, computed once per doc
     # before the band explode: the level-2 re-split key for buckets
     # that stay hot even after next-band refinement (_cap_buckets) —
     # identical docs have identical sigall, so the jaccard-1.0 recall
     # floor survives any number of re-splits
-    sigall = F.xxhash64(*[F.col(f"h{i}") for i in range(bands * rows)])
+    sigall = F.expr(
+        "xxhash64(" + ", ".join(f"h{i}" for i in range(bands * rows)) + ")"
+    )
     return sig.select(
         F.col(id_col), sigall.alias("sigall"), F.explode(band_keys).alias("bk")
     ).select(
@@ -645,20 +647,17 @@ def simhash(
     # the nested-lambda fold drops out of codegen and allocates a
     # 48-long array per token, and CollapseProject duplicates the
     # expression into every band reference. The per-bit filter chain
-    # stays in whole-stage codegen at every call site.
-    ntok = F.size(F.col("_hs"))
-    fp = None
-    for i in range(SIMHASH_BITS):
-        cnt = F.size(
-            F.filter(
-                F.col("_hs"),
-                lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == F.lit(1),
-            )
+    # stays in whole-stage codegen at every call site. The sum is one
+    # parsed expression: as a Column tree it would cost one py4j round
+    # trip per node (~8.6k).
+    fp = F.expr(
+        " + ".join(
+            f"CASE WHEN size(filter(_hs, h -> (shiftright(h, {i}) & 1) = 1))"
+            f" * 2 > size(_hs) THEN CAST({1 << i} AS BIGINT)"
+            " ELSE CAST(0 AS BIGINT) END"
+            for i in range(SIMHASH_BITS)
         )
-        term = F.when(cnt * 2 > ntok, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        fp = term if fp is None else fp + term
+    )
     return base.select(F.col(id_col), fp.alias("simhash"))
 
 
@@ -703,11 +702,10 @@ def simhash_pairs(
     n_bands = max_hamming + 1
     width = SIMHASH_BITS // n_bands
 
-    def band_val(b: int) -> F.Column:
+    def band_val(b: int) -> str:
         return (
-            F.shiftright(F.col("simhash"), (b % n_bands) * width)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .cast("long")
+            f"CAST(shiftright(simhash, {(b % n_bands) * width})"
+            f" & {(1 << width) - 1} AS BIGINT)"
         )
 
     from .features import _pin
@@ -716,15 +714,14 @@ def simhash_pairs(
     # repeated calls in one session cannot leak cached fingerprint
     # tables — the same discipline the minhash paths use
     fp = _pin(simhash(df, id_col, text_col, hash_fn=hash_fn))
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_val(b).alias("key"),
-                band_val(b + 1).alias("nxt"),
-            )
+    bands = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, 'key', {band_val(b)},"
+            f" 'nxt', {band_val(b + 1)})"
             for b in range(n_bands)
-        ]
+        )
+        + ")"
     )
     keyed = fp.select(
         F.col(id_col), F.col("simhash"), F.explode(bands).alias("bk")
@@ -2742,7 +2739,7 @@ def dedup_threshold_sweep(
     cand = sorted({float(t) for t in thresholds})
     spark = pairs.sparkSession
     tarr = F.array(*[F.lit(t) for t in cand])
-    tdf = spark.createDataFrame([(t,) for t in cand], "threshold double")
+    tdf = local_frame(spark, [(t,) for t in cand], "threshold double")
     # ONE reference to the exploded frame: each qualifying pair emits
     # its two endpoints per threshold, so n_pairs = rows/2 and n_docs =
     # distinct endpoints from the SAME aggregation — referencing the

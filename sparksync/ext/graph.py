@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # fused rounds keep lineage (cache-backed execution, but the logical
 # plan doubles per round); every _TRUNC_EVERY-th round localCheckpoints
 # to truncate it, bounding plan depth at 2^_TRUNC_EVERY tiny subtrees
@@ -109,9 +111,7 @@ def _local_components(
             StructField("component", label_type, True),
         ]
     )
-    return spark.createDataFrame(
-        sorted(labels.items()), schema=schema
-    )
+    return local_frame(spark, sorted(labels.items()), schema)
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -202,12 +202,13 @@ def connected_components(
             rows = [(r[0], r[1]) for r in e.collect()]
             if not any(a is None or b is None for a, b in rows):
                 # label dtype = the union's coerced type, matching what
-                # the distributed loop's labels would carry. Broadcast
-                # hint: the relation is bounded by the cap (≤ ~2 MB), and
-                # without it consumers' INITIAL plans pick SortMergeJoin
-                # against the LocalRelation — AQE converts back to
-                # broadcast at runtime but only after the corpus side's
-                # shuffle map stage already ran
+                # the distributed loop's labels would carry. The labels
+                # are a LocalRelation (local_frame), so reading them runs
+                # no Python worker. Broadcast hint: the relation is
+                # bounded by the cap (≤ ~2 MB), and without it consumers'
+                # INITIAL plans pick SortMergeJoin against it — AQE
+                # converts back to broadcast at runtime but only after
+                # the corpus side's shuffle map stage already ran
                 local = F.broadcast(
                     _local_components(
                         rows,

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import local_frame
+
 
 def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -202,24 +204,23 @@ def _lsh_scored_pairs(
         raise ValueError("n_planes must divide evenly into n_bands")
     width = n_planes // n_bands
     e = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
-    # ONE nested-array literal for the whole 32x64 plane matrix + a
-    # transform lambda, instead of 32 per-plane F.array(*[F.lit(x)...])
-    # expressions. The old formulation built ~2,300 py4j Column calls
-    # and a ~16k-node expression tree that Catalyst re-analyzed on
-    # every consumer of the (persisted) projection — measured 7.6 s to
-    # count 36k candidate pairs over 2,000 vectors at sf0.1, nearly all
-    # of it driver-side plan work. Bit values are unchanged: the dot is
-    # the same sequential zip_with+aggregate fold per plane, so signs,
-    # buckets, and the inlined-plane DuckDB oracles (q32/q178) agree
-    # bit-for-bit.
+    # The plane matrix and the powers of two are each ONE parsed array
+    # literal (one py4j round trip), mapped by a transform lambda:
+    # F.lit(list) would send one `lit` per element, ~8.5k round trips
+    # for a 32x64 matrix. Doubles render as repr(x) + "D", which parses
+    # back to the same double, so signs, buckets, and the inlined-plane
+    # DuckDB oracles (q32/q178) agree bit-for-bit.
     planes = _rp_planes(n_planes, dim)
+    plane_sql = ", ".join(
+        "array(" + ", ".join(repr(x) + "D" for x in row) + ")" for row in planes
+    )
     bits_col = F.transform(
-        F.lit(planes),
+        F.expr(f"array({plane_sql})"),
         lambda plane: F.when(dot(F.col("v"), plane) >= 0, F.lit(1)).otherwise(
             F.lit(0)
         ),
     )
-    pow2 = F.lit([2**i for i in range(width)])
+    pow2 = F.expr("array(" + ", ".join(str(2**i) for i in range(width)) + ")")
 
     def band_from_bits(bits, bi):
         # sum(bit_i * 2^i) over band bi's slice — integer-exact in any
@@ -544,7 +545,8 @@ def ivf_train(
             .collect()
         )
         spark = emb.sparkSession
-        cent = spark.createDataFrame(
+        cent = local_frame(
+            spark,
             [(r["cid"], r["cv"]) for r in new_rows], "cid long, cv array<double>"
         )
     return cent
@@ -1310,8 +1312,10 @@ def _collect_vectors(
     codebooks/centroids are n_codes/n_centroids rows by construction
     and queries are |Q| rows — the same bounded driver handoff
     ivf_train's per-iteration centroid collect already performs. The
-    predicate pushes to the scan, so at corpus scale this reads the
-    id-pruned row groups, never the table."""
+    `id <` / `IN` predicate pushes to the scan, but it prunes row
+    groups only when the corpus is laid out clustered by id (row-group
+    min/max statistics then exclude most groups); otherwise the
+    collect scans the whole table to find its few rows."""
     conds = []
     if ids is not None:
         conds.append(F.col(id_col).isin([int(x) for x in ids]))
@@ -1468,8 +1472,8 @@ def pq_train(
             (row.j, row.code, trained.get((row.j, row.code), list(row.cv)))
             for row in cb.collect()
         ]
-        cb = spark.createDataFrame(
-            full, "j int, code long, cv array<double>"
+        cb = local_frame(
+            spark, full, "j int, code long, cv array<double>"
         )
     return cb
 
@@ -1493,8 +1497,9 @@ def _adc_local_model(
     local relation). The collected sample also seeds the dim memo, so
     no layer of a composed PQ path pays the `.first()` probe job.
     Returns (cb_df, cb_rows, qvecs, sd): the codebook as a DataFrame
-    (a LocalRelation in the default case — broadcasting one launches
-    no Spark job) and as rows for the driver-side distance table,
+    (in the default case a LocalRelation built by local_frame, so
+    broadcasting it launches no Spark job and no Python worker) and as
+    rows for the driver-side distance table,
     the {query_id: vector} map, and the subspace width."""
     qids = [int(x) for x in query_ids]
     if codebooks is None:
@@ -1509,8 +1514,8 @@ def _adc_local_model(
             for i in sorted(i for i in vecs if i < n_codes)
             for j in range(m_subspaces)
         ]
-        cb_df = emb.sparkSession.createDataFrame(
-            cb_rows, "j int, code long, cv array<double>"
+        cb_df = local_frame(
+            emb.sparkSession, cb_rows, "j int, code long, cv array<double>"
         )
     else:
         if vecs is None:
@@ -1603,7 +1608,8 @@ def pq_adc_topk(
     # turned into the ADC distance table driver-side (_py_sq_l2 is
     # bit-identical to the JVM fold). The old shape derived both from
     # corpus scans and paid serialized broadcast-build jobs for qsub
-    # and the cb x qsub join; a LocalRelation broadcast launches none.
+    # and the cb x qsub join. The distance table is a LocalRelation
+    # (local_frame), whose broadcast launches no job and no Python worker.
     e = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
     cb_df, cb_rows, qvecs, sd = _adc_local_model(
         emb, e, [query_id], m_subspaces, n_codes, id_col, vec_col, codebooks
@@ -1615,7 +1621,8 @@ def pq_adc_topk(
             emb, m_subspaces, n_codes, id_col, vec_col, codebooks=cb_df
         )
     )
-    dtab = emb.sparkSession.createDataFrame(
+    dtab = local_frame(
+        emb.sparkSession,
         [r[1:] for r in _local_dtab(cb_rows, qvecs, m_subspaces, sd)],
         "j int, code long, qd2 double",
     )
@@ -1660,7 +1667,8 @@ def pq_adc_batch(
             emb, m_subspaces, n_codes, id_col, vec_col, codebooks=cb_df
         )
     )
-    dtab = emb.sparkSession.createDataFrame(
+    dtab = local_frame(
+        emb.sparkSession,
         _local_dtab(cb_rows, qvecs, m_subspaces, sd),
         "query_id long, j int, code long, qd2 double",
     )
@@ -1720,13 +1728,15 @@ def pq_recall_audit(
     emb = _pin(emb.select(F.col(id_col), F.col(vec_col)))
     e = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
     # ONE bounded collect serves the exact side's query relation (a
-    # LocalRelation broadcast launches no job) AND the ADC side's
+    # local_frame LocalRelation: its broadcast launches no job and no
+    # Python worker) AND the ADC side's
     # model layer (passed through pq_adc_batch's vecs) — round 16
     vecs = _collect_vectors(
         e, id_col, ids=query_ids,
         below=n_codes if codebooks is None else None,
     )
-    q = emb.sparkSession.createDataFrame(
+    q = local_frame(
+        emb.sparkSession,
         [
             (i, vecs[i])
             for i in sorted({int(x) for x in query_ids})
@@ -1812,8 +1822,9 @@ def ivf_pq_topk(
     # vectors and the query are bounded model state — ONE collect
     # covers all of them, the probe (top-nprobe centroids by cosine)
     # is computed driver-side with the bit-identical fold twins, and
-    # the probe/codebook relations become LocalRelations whose
-    # broadcasts launch no Spark jobs. The corpus-sized work (assign,
+    # the probe, codebook and distance tables are LocalRelations
+    # (local_frame) whose broadcasts launch no Spark job and no Python
+    # worker. The corpus-sized work (assign,
     # encode, the ADC aggregate) is unchanged.
     below = max(
         n_centroids if centroids is None else 0,
@@ -1827,7 +1838,7 @@ def ivf_pq_topk(
         cent_rows = [
             (int(i), vecs[i]) for i in sorted(i for i in vecs if i < n_centroids)
         ]
-        cent = spark.createDataFrame(cent_rows, "cid long, cv array<double>")
+        cent = local_frame(spark, cent_rows, "cid long, cv array<double>")
     else:
         cent = centroids
         cent_rows = [(int(r[0]), list(r[1])) for r in centroids.collect()]
@@ -1858,7 +1869,7 @@ def ivf_pq_topk(
             )
         )
         probe_rows = [(cid,) for cid, _ in scored[:nprobe]]
-    probe = spark.createDataFrame(probe_rows, "centroid_id long")
+    probe = local_frame(spark, probe_rows, "centroid_id long")
     # probe is nprobe rows -> broadcast; members is CORPUS-sized
     # (~corpus * nprobe / n_centroids) so the enc-side semi-join gets
     # NO broadcast hint — the planner/AQE picks the strategy by size
@@ -1868,7 +1879,8 @@ def ivf_pq_topk(
     enc = pq_encode(
         emb, m_subspaces, n_codes, id_col, vec_col, codebooks=cb_df
     ).join(members, id_col, "left_semi")
-    dtab = spark.createDataFrame(
+    dtab = local_frame(
+        spark,
         [r[1:] for r in _local_dtab(cb_rows, qvecs, m_subspaces, sd)],
         "j int, code long, qd2 double",
     )

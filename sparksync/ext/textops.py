@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 #: stopword list used by the quality heuristic (kept tiny + explicit so
 #: the DuckDB oracle can repeat it verbatim)
 STOPWORDS = ("the", "a", "of")
@@ -1115,7 +1117,8 @@ def bpe_train(
         # vocabulary replaces num_merges argmax jobs + 1-row collects
         rows = [(r[0], r[1]) for r in vocab.collect()]
         _release_checkpoint(vocab)
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             _local_bpe_merges(rows, num_merges),
             "step int, left_sym string, right_sym string, merged string,"
             " cnt long",
@@ -1173,7 +1176,8 @@ def bpe_train(
                 vocab, cur, pending = nxt, nxt, 0
     finally:
         _release_checkpoint(vocab)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         merges,
         "step int, left_sym string, right_sym string, merged string, cnt long",
     )
@@ -2112,9 +2116,7 @@ def lm_bigram_counts(
             lambda a, b: F.struct(a.alias("rw"), b.alias("rw2")),
         ),
     ).otherwise(F.array().cast("array<struct<rw:string,rw2:string>>"))
-    vdf = df.sparkSession.createDataFrame(
-        [(t,) for t in vocab], "tok string"
-    )
+    vdf = local_frame(df.sparkSession, [(t,) for t in vocab], "tok string")
     m1 = F.broadcast(vdf.select(F.col("tok").alias("_rw"), F.lit(1).alias("_v1")))
     m2 = F.broadcast(vdf.select(F.col("tok").alias("_rw2"), F.lit(1).alias("_v2")))
     return (
@@ -2178,9 +2180,17 @@ def lm_score_against_model(
 
     `vocab` is deduplicated at entry (order-preserving), the same
     contract as lm_bigram_counts: a duplicated token would inflate
-    V_eff and, on the join path, multiply bigram rows."""
+    V_eff and, on the join path, multiply bigram rows. A literal
+    '<unk>' in `vocab` raises ValueError: it is the out-of-vocabulary
+    sentinel, so it would silently merge with unknown tokens in both
+    the model lookup and n_unk."""
     if mode not in ("ln", "fixed"):
         raise ValueError(f"lm_score_against_model: unknown mode {mode!r}")
+    if "<unk>" in vocab:
+        raise ValueError(
+            "lm_score_against_model: vocab contains the reserved "
+            "out-of-vocabulary token '<unk>'"
+        )
     vocab = list(dict.fromkeys(vocab))
     scale = 1 << scale_bits
     cap = ((1 << 63) - 1) >> scale_bits
@@ -2259,9 +2269,7 @@ def lm_score_against_model(
         # corpus pass. At real vocabularies (> 64 tokens — i.e. every
         # production corpus; the gate fixtures stay under the
         # threshold) this removes one of the branch's two full scans.
-        vdf = df.sparkSession.createDataFrame(
-            [(t,) for t in vocab], "tok string"
-        )
+        vdf = local_frame(df.sparkSession, [(t,) for t in vocab], "tok string")
         base = df.select(F.col(id_col), toks.alias("_t")).where(
             F.size("_t") >= 2
         )

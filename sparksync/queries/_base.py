@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import compare
 from ..ext import asof, dedup, jsonops, sampling, similarity, skew, textops
+from ..session import local_frame  # noqa: F401 — driver-built tables
 from ..source import plan_pages
 
 Tables = (

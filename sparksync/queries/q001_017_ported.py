@@ -110,8 +110,8 @@ def q04_page_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = load(spark, sf_dir, t).count()
         plan = plan_pages(n, t, page_size=10_000)
         rows.append((t, n, plan.num_pages))
-    return spark.createDataFrame(
-        rows, "table_name string, row_count bigint, num_pages bigint"
+    return local_frame(
+        spark, rows, "table_name string, row_count bigint, num_pages bigint"
     )
 
 

@@ -410,8 +410,10 @@ def q34_ddl_typemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("region", "customer", "orders", "events", "documents"):
         for mc in cat.table_spec(t).mapped():
             rows.append((t, mc.name, mc.mysql_type, mc.spark_type.simpleString()))
-    return spark.createDataFrame(
-        rows, "table_name string, column_name string, mysql_type string, spark_type string"
+    return local_frame(
+        spark,
+        rows,
+        "table_name string, column_name string, mysql_type string, spark_type string",
     )
 
 
@@ -457,8 +459,8 @@ def q35_objects_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     job = SyncJob(spark, sf_dir, sf_dir + "/_unused_out")
     rows = job.synthesize_objects(job.plan())
-    return spark.createDataFrame(
-        rows, "object_class string, object_name string, stmt string"
+    return local_frame(
+        spark, rows, "object_class string, object_name string, stmt string"
     )
 
 

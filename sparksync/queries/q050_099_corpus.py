@@ -979,7 +979,8 @@ def q80_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..compare import merge_cdc
 
     sup = load(spark, sf_dir, "supplier")
-    changes = spark.createDataFrame(
+    changes = local_frame(
+        spark,
         [
             (1, "UPDATED NAME", "U", 10),
             (2, None, "D", 11),

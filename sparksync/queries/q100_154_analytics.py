@@ -684,7 +684,8 @@ def q119_snapshots_at(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..compare import snapshots_at
 
     sup = load(spark, sf_dir, "supplier")
-    changes = spark.createDataFrame(
+    changes = local_frame(
+        spark,
         [
             (1, "UPDATED NAME", "U", 10),
             (2, None, "D", 11),

@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -63,3 +64,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-built ``rows``, as a JVM-side relation.
+
+    ``createDataFrame`` over a Python list plans a ``LogicalRDD`` over a
+    Python RDD, so every action on it forks Python workers to re-serialize
+    the rows. Handing Spark an Arrow table instead gives a ``LocalRelation``
+    (an RDD built in the JVM above
+    ``spark.sql.execution.arrow.localRelationThreshold``): no Python
+    worker runs either way. ``schema`` is a DDL string or a StructType;
+    the result has exactly that schema, nullability included.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -7,6 +7,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -4967,6 +4969,20 @@ def test_lm_score_against_model_dedupes_vocab(spark, monkeypatch):
         assert score(vocab[:2] + ["beta"] + vocab[2:]) == clean, threshold
 
 
+def test_lm_score_against_model_rejects_unk_in_vocab(spark):
+    """'<unk>' is the out-of-vocabulary sentinel: a vocab that lists it
+    literally would merge real '<unk>' tokens with unknown ones in the
+    model lookup and in n_unk, so the entry contract refuses it."""
+    from sparksync.ext import textops
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta <unk> alpha")], "doc_id long, text string"
+    )
+    counts = textops.lm_bigram_counts(docs, ["alpha", "beta"])
+    with pytest.raises(ValueError, match="<unk>"):
+        textops.lm_score_against_model(docs, counts, ["alpha", "<unk>", "beta"])
+
+
 def test_lm_score_against_model_branch_parity_large_vocab(docs, monkeypatch):
     """Round 16: the large-vocab (broadcast-join) branch derives
     (n_tokens, n_unk) from the fused bigram types + a last-token
@@ -7571,3 +7587,326 @@ def test_ivf_pq_topk_matches_python_model(spark):
     # the composition prunes: every result is a member of a probed
     # cluster, and membership is a strict subset of the corpus
     assert {v for v, _ in got} <= members and len(members) < len(vecs)
+
+
+# ---------------------------------------------------------------------------
+# Wide expressions as parsed SQL strings. Each function below once
+# constructed its wide expression as a Column tree, one py4j round trip
+# per node. The Column forms are kept here as references: the parsed
+# form must analyze to the same plan (sameSemantics) and return the same
+# rows, and its construction must stay inside a py4j round-trip budget,
+# so a plan-construction cost regression fails here instead of in a
+# benchmark.
+
+
+@contextlib.contextmanager
+def _py4j_calls():
+    """Count the commands this thread sends to the JVM. py4j's
+    finalizer thread sends the object-release messages, which belong to
+    whatever work dropped the objects, so they are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    orig = ClientServerConnection.send_command
+    box = [0]
+    me = threading.get_ident()
+
+    def counting(conn, *a, **k):
+        if threading.get_ident() == me:
+            box[0] += 1
+        return orig(conn, *a, **k)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield box
+    finally:
+        ClientServerConnection.send_command = orig
+
+
+def _column_minhash_signatures(sh, id_col="doc_id", k=dedup.MINHASH_K):
+    mask32 = F.lit(0xFFFFFFFF)
+    base = sh.select(
+        F.col(id_col),
+        F.xxhash64(F.col("shingle")).bitwiseAND(mask32).alias("_x"),
+    )
+    mins = [
+        F.min((F.lit(a) * F.col("_x") + F.lit(b)).bitwiseAND(mask32)).alias(f"h{i}")
+        for i, (a, b) in enumerate(dedup._mh_consts(k))
+    ]
+    return base.groupBy(id_col).agg(*mins)
+
+
+def _column_band_buckets(sig, id_col, bands, rows):
+    def band_key(b):
+        return F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
+
+    band_keys = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                band_key(b).alias("key"),
+                band_key((b + 1) % bands).alias("nxt"),
+            )
+            for b in range(bands)
+        ]
+    )
+    sigall = F.xxhash64(*[F.col(f"h{i}") for i in range(bands * rows)])
+    return sig.select(
+        F.col(id_col), sigall.alias("sigall"), F.explode(band_keys).alias("bk")
+    ).select(
+        id_col,
+        "sigall",
+        F.col("bk.band").alias("band"),
+        F.col("bk.key").alias("key"),
+        F.col("bk.nxt").alias("nxt"),
+    )
+
+
+def _column_simhash(df, id_col="doc_id", text_col="text", hash_fn=None):
+    from sparksync.ext.textops import tokens
+
+    if hash_fn is None:
+        hash_fn = F.xxhash64
+    hs = F.transform(tokens(text_col), lambda t: hash_fn(t))
+    base = df.select(F.col(id_col), hs.alias("_hs")).where(F.size("_hs") > 0)
+    ntok = F.size(F.col("_hs"))
+    fp = None
+    for i in range(dedup.SIMHASH_BITS):
+        cnt = F.size(
+            F.filter(
+                F.col("_hs"),
+                lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == F.lit(1),
+            )
+        )
+        term = F.when(cnt * 2 > ntok, F.lit(1 << i).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        fp = term if fp is None else fp + term
+    return base.select(F.col(id_col), fp.alias("simhash"))
+
+
+def _column_simhash_pairs(
+    df, max_hamming=dedup.SIMHASH_MAX_HAMMING, id_col="doc_id", text_col="text",
+    bucket_cap=10_000, hash_fn=None,
+):
+    from sparksync.ext.features import _pin
+
+    n_bands = max_hamming + 1
+    width = dedup.SIMHASH_BITS // n_bands
+
+    def band_val(b):
+        return (
+            F.shiftright(F.col("simhash"), (b % n_bands) * width)
+            .bitwiseAND(F.lit((1 << width) - 1))
+            .cast("long")
+        )
+
+    fp = _pin(_column_simhash(df, id_col, text_col, hash_fn=hash_fn))
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                band_val(b).alias("key"),
+                band_val(b + 1).alias("nxt"),
+            )
+            for b in range(n_bands)
+        ]
+    )
+    keyed = fp.select(
+        F.col(id_col), F.col("simhash"), F.explode(bands).alias("bk")
+    ).select(
+        id_col,
+        "simhash",
+        F.col("bk.band").alias("band"),
+        F.col("bk.key").alias("key"),
+        F.col("bk.nxt").alias("nxt"),
+    )
+    if bucket_cap is not None and n_bands >= 2:
+        sizes = keyed.groupBy("band", "key").agg(F.count(F.lit(1)).alias("_n"))
+        keyed = keyed.join(F.broadcast(sizes), ["band", "key"]).select(
+            id_col,
+            "simhash",
+            "band",
+            F.when(
+                F.col("_n") > bucket_cap,
+                (F.col("key") + 1) * (2**width) + F.col("nxt"),
+            )
+            .otherwise(F.col("key"))
+            .alias("key"),
+        )
+    keyed = _pin(keyed.repartition(F.col("band"), F.col("key")))
+    a = keyed.select(F.col(id_col).alias("d1"), F.col("simhash").alias("f1"), "band", "key")
+    b = keyed.select(F.col(id_col).alias("d2"), F.col("simhash").alias("f2"), "band", "key")
+    return (
+        a.join(b, ["band", "key"])
+        .where(F.col("d1") < F.col("d2"))
+        .select(
+            "d1",
+            "d2",
+            F.bit_count(F.col("f1").bitwiseXOR(F.col("f2"))).cast("long").alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["d1", "d2"])
+    )
+
+
+def _column_lsh_scored_pairs(
+    emb, n_planes=32, n_bands=4, dim=64, bucket_cap=10_000,
+    id_col="vec_id", vec_col="embedding",
+):
+    from pyspark.storagelevel import StorageLevel
+
+    dot, cosine = similarity.dot, similarity.cosine
+    width = n_planes // n_bands
+    e = emb.select(F.col(id_col), similarity._to_double(F.col(vec_col)).alias("v"))
+    planes = similarity._rp_planes(n_planes, dim)
+    bits_col = F.transform(
+        F.lit(planes),
+        lambda plane: F.when(dot(F.col("v"), plane) >= 0, F.lit(1)).otherwise(
+            F.lit(0)
+        ),
+    )
+    pow2 = F.lit([2**i for i in range(width)])
+
+    def band_from_bits(bits, bi):
+        return F.aggregate(
+            F.zip_with(
+                F.slice(bits, bi * width + 1, F.lit(width)),
+                pow2,
+                lambda b, p: (b * p).cast("long"),
+            ),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+
+    cells = F.element_at(
+        F.transform(
+            F.array(F.struct(bits_col.alias("b"))),
+            lambda s: F.transform(
+                F.sequence(F.lit(0), F.lit(n_bands - 1)),
+                lambda bi: F.struct(
+                    bi.cast("int").alias("band"),
+                    band_from_bits(s["b"], bi).alias("bucket"),
+                    band_from_bits(
+                        s["b"], F.pmod(bi + 1, F.lit(n_bands))
+                    ).alias("nxt"),
+                ),
+            ),
+        ),
+        1,
+    )
+    hashed = e.select(id_col, "v", cells.alias("_cells")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    keyed = hashed.select(id_col, F.explode("_cells").alias("bk")).select(
+        id_col,
+        F.col("bk.band").alias("band"),
+        F.col("bk.bucket").alias("bucket"),
+        F.col("bk.nxt").alias("nxt"),
+    )
+    if bucket_cap is not None:
+        sizes = keyed.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
+        keyed = keyed.join(F.broadcast(sizes), ["band", "bucket"]).select(
+            id_col,
+            "band",
+            F.when(
+                F.col("_n") > bucket_cap,
+                (F.col("bucket") + 1) * (2**width) + F.col("nxt"),
+            )
+            .otherwise(F.col("bucket"))
+            .alias("bucket"),
+        )
+    a = keyed.select(F.col(id_col).alias("d1"), "band", "bucket")
+    b = keyed.select(F.col(id_col).alias("d2"), "band", "bucket")
+    cand = (
+        a.join(b, ["band", "bucket"])
+        .where(F.col("d1") < F.col("d2"))
+        .select("d1", "d2")
+        .dropDuplicates(["d1", "d2"])
+    )
+    va = hashed.select(F.col(id_col).alias("d1"), F.col("v").alias("va"))
+    vb = hashed.select(F.col(id_col).alias("d2"), F.col("v").alias("vb"))
+    return (
+        cand.join(va, "d1")
+        .join(vb, "d2")
+        .select("d1", "d2", cosine(F.col("va"), F.col("vb")).alias("cos"))
+    )
+
+
+def _same_plan_and_rows(new, old):
+    assert new.sameSemantics(old)
+    assert new.schema == old.schema
+    assert sorted(new.collect()) == sorted(old.collect())
+
+
+def _build_within(budget, build):
+    """Run `build` (lazily constructs a DataFrame) and assert its py4j
+    round-trip count stays within `budget`; return the DataFrame."""
+    with _py4j_calls() as calls:
+        df = build()
+    assert calls[0] <= budget, f"{calls[0]} py4j round trips > budget {budget}"
+    return df
+
+
+def test_minhash_parsed_expressions(docs):
+    sh = dedup.shingles(docs)
+    sig = _build_within(600, lambda: dedup.minhash_signatures(sh))
+    _same_plan_and_rows(sig, _column_minhash_signatures(sh))
+    bands, rows = dedup.LSH_BANDS, dedup.LSH_ROWS
+    bk = _build_within(300, lambda: dedup._band_buckets(sig, "doc_id", bands, rows))
+    _same_plan_and_rows(bk, _column_band_buckets(sig, "doc_id", bands, rows))
+
+
+def test_simhash_parsed_expressions(docs, monkeypatch):
+    from sparksync.ext import features
+
+    # simhash_pairs pins twice, and a pin probes every live registry
+    # row: start from an empty registry so the budget measures
+    # simhash_pairs itself, not the pins earlier tests left behind
+    monkeypatch.setattr(features, "_PINNED", [])
+    fp = _build_within(600, lambda: dedup.simhash(docs))
+    _same_plan_and_rows(fp, _column_simhash(docs))
+    md5 = dedup.md5_token_hash
+    _same_plan_and_rows(
+        dedup.simhash(docs, hash_fn=md5), _column_simhash(docs, hash_fn=md5)
+    )
+    pairs = _build_within(2_000, lambda: dedup.simhash_pairs(docs, bucket_cap=5))
+    old = _column_simhash_pairs(docs, bucket_cap=5)
+    _same_plan_and_rows(pairs, old)
+    assert pairs.count() > 0
+    features.release_pinned()
+
+
+def test_lsh_scored_pairs_parsed_expressions(emb):
+    new = _build_within(4_000, lambda: similarity._lsh_scored_pairs(emb))
+    _same_plan_and_rows(new, _column_lsh_scored_pairs(emb))
+    assert new.count() > 0
+
+
+def test_local_frame_matches_create_dataframe_and_is_local_relation(spark):
+    """local_frame is the one way sparksync builds a table from driver
+    rows: same schema (nullability included) and rows as
+    createDataFrame(rows, ddl), but planned as a LocalRelation, so no
+    Python worker runs when it is read."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from sparksync.session import local_frame
+
+    ddl = "a long, b int, c double, d string, e array<double>"
+    rows = [
+        (1, 2, 0.1, "x", [1.5, None, -0.0]),
+        (None, None, None, None, None),
+        (2**40, -(2**31), 1e-300, "", []),
+    ]
+    strict = StructType(
+        [StructField("n", LongType(), False), StructField("m", LongType(), True)]
+    )
+    for rs, schema in ((rows, ddl), ([], ddl), ([(1, None), (2, 3)], strict)):
+        new = local_frame(spark, rs, schema)
+        old = spark.createDataFrame(rs, schema)
+        assert new.schema == old.schema
+        assert new.collect() == old.collect()
+        leaf = new._jdf.queryExecution().analyzed().getClass().getSimpleName()
+        assert leaf == "LocalRelation"
+        assert "LogicalRDD" not in new._jdf.queryExecution().optimizedPlan().toString()

@@ -160,3 +160,26 @@ def test_readme_counts_match_registry():
     assert (int(m2.group(1)), int(m2.group(2))) == (len(ORACLES), len(QUERIES)), (
         f"README says {m2.group(0)}, registry has {len(ORACLES)}/{len(QUERIES)}"
     )
+
+
+def test_driver_tables_go_through_local_frame():
+    """No module under sparksync/ calls createDataFrame except
+    session.local_frame: a list-backed createDataFrame plans a Python
+    RDD that forks Python workers on every read, and local_frame's
+    LocalRelation is the one way to build a table from driver rows."""
+    hits = []
+    for mod in sorted((REPO / "sparksync").rglob("*.py")):
+        tree = ast.parse(mod.read_text())
+        allowed = set()
+        if mod.name == "session.py":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                hits.append(f"{mod.relative_to(REPO)}:{node.lineno}")
+    assert hits == [], f"createDataFrame outside local_frame: {hits}"
