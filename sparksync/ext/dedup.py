@@ -21,9 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..session import local_frame
+from ._materialize import _checkpoint, _pin, _release
 from .textops import tokens
 
 SHINGLE_N = 3
@@ -122,7 +122,7 @@ def jaccard_pairs(
     Only compose this path into pipelines you will actually execute;
     the default (max_df=None) builds fully lazily."""
     # The exploded index is repartitioned by the join key ONCE and
-    # pinned (features._pin, MEMORY_AND_DISK), so the self-join's two
+    # pinned (_pin, MEMORY_AND_DISK), so the self-join's two
     # sides and `sizes` are co-partitioned reads of one cached relation:
     # no per-side exchange, no per-consumer re-derivation. The pin
     # costs what a second exchange's shuffle files would, and it spills
@@ -130,8 +130,6 @@ def jaccard_pairs(
     # gate-SF oracle form; the documented 100 TB pair path is MinHash
     # LSH.
     sh = shingles(df, id_col, text_col)
-    from .features import _pin
-
     sh = _pin(sh.repartition(F.col("shingle")))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     join_sh = sh
@@ -139,12 +137,11 @@ def jaccard_pairs(
         # hot set is heavy-hitter-bounded (<= total postings / max_df
         # distinct shingles), so checkpointing + counting it is cheap;
         # the count is the "cap binds" flag the caller asked for
-        hot = (
+        hot = _checkpoint(
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_df"))
             .where(F.col("_df") > max_df)
             .select("shingle")
-            .localCheckpoint(eager=True)
         )
         n_hot = hot.count()
         if n_hot:
@@ -364,7 +361,6 @@ def minhash_dedup_pairs(
     text_col: str = "text",
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    persist_signatures: bool = False,
     bucket_cap: int | None = 10_000,
 ) -> DataFrame:
     """LSH candidates -> exact-Jaccard verification. The scale path:
@@ -383,23 +379,9 @@ def minhash_dedup_pairs(
       candidate set is data-dependent (boilerplate-heavy corpora can
       make it huge), so it carries NO broadcast hint — AQE picks the
       join strategy from its measured size.
-
-    persist_signatures: the plan scans the corpus once per banded join
-    side PLUS once per side's bucket-size census (measured: AQE
-    exchange reuse collapses only one of the four identical signature
-    subtrees). Default False — at bench SF recompute still beats cache
-    materialization plus the AQE stats it hides (persist=True measured
-    3.6s vs 2.7s median at sf0.1, census included; the census itself
-    costs ~0.5-0.7s of the 2.7s and is the price of the bounded join).
-    Flip to True when one corpus scan is the dominant cost (10^9+
-    docs): signatures are ~8*K bytes/doc (~520 B at K=64, ~0.5 TB per
-    10^9 docs), MEMORY_AND_DISK spills the tail, and with the census
-    the persist now saves three recomputes, not one.
     """
     arrs = shingle_arrays(df, id_col, text_col)
     sig = minhash_signatures(shingles(df, id_col, text_col), id_col, k=bands * rows)
-    if persist_signatures:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
     # banded join + exact verify live in minhash_pairs_from_signatures
     # (shared with the precomputed-signature deployment path). `df` is
     # passed as the raw verify source so candidate ids prune the
@@ -447,18 +429,16 @@ def minhash_pairs_from_signatures(
     — the split exists so the expensive signature pass can be paid
     once per corpus snapshot instead of once per dedup run.
 
-    The raw band rows are pinned (MEMORY_AND_DISK, features._pin's
-    FIFO registry) before fanning out to the census + both self-join
-    sides: the signature subtree contains higher-order-function
-    lambdas that defeat Spark's exchange-reuse canonicalization, so
-    without the pin the scan->shingle->64-min pipeline executes FOUR
-    times (plan-audited r5; idle wall time hides it on spare cores,
-    but under concurrent load — the driver's 4.17 s vs self-measured
-    2.7 s gap — and at 100 TB, 4 corpus scans vs 1 is the whole game).
+    The raw band rows are pinned (MEMORY_AND_DISK, _pin's FIFO
+    registry) before fanning out to the census + both self-join sides:
+    the signature subtree contains higher-order-function lambdas that
+    defeat Spark's exchange-reuse canonicalization, so without the pin
+    the scan->shingle->64-min pipeline executes FOUR times
+    (plan-audited; at 100 TB, 4 corpus scans vs 1 is the whole game).
     Pinned rows are ~16x(id,band,2 keys) per doc (~600 B/doc, same
     order as the signature table); the tail spills to disk.
 
-    raw (round 15, guide §8): the pre-shingle (id_col, text_col) frame.
+    raw: the pre-shingle (id_col, text_col) frame.
     When given (minhash_dedup_pairs passes its input), the verify side
     is rebuilt from raw semi-pruned by candidate ids BEFORE tokenizing,
     so only candidate docs ever tokenize or shingle for verification.
@@ -468,8 +448,6 @@ def minhash_pairs_from_signatures(
     joined), so the prune is applied to the raw rows explicitly. When
     raw is None (the precomputed-arrays deployment path) the semi
     still prunes which arrays the pair joins read."""
-    from .features import _pin
-
     buckets = _cap_buckets(
         _pin(_band_buckets(sig, id_col, bands, rows)), id_col, bucket_cap
     )
@@ -478,8 +456,8 @@ def minhash_pairs_from_signatures(
     # cand feeds THREE consumers (the verify-side id prune + the two
     # array-attach joins below); unpinned, each would re-run the
     # banding join. Candidate pairs are two longs per row — tiny. This
-    # mirrors minhash_dedup_pairs_cross, which has pinned its cand and
-    # semi-pruned both verify sides since round 12.
+    # mirrors minhash_dedup_pairs_cross, which pins its cand and
+    # semi-prunes both verify sides.
     cand = _pin(
         l.join(r, ["band", "key"])
         .where(F.col("d1") < F.col("d2"))
@@ -562,8 +540,6 @@ def minhash_dedup_pairs_cross(
     # sides' refinement + the corpus join side); lambda subtrees
     # defeat exchange reuse, so pin them — one corpus signature pass
     # instead of three (see minhash_pairs_from_signatures)
-    from .features import _pin
-
     raw_c = _pin(_band_buckets(sig_c, id_col, bands, rows))
     bn = _cap_buckets(raw_n, id_col, bucket_cap, census=raw_c).select(
         F.col(id_col).alias("new_id"), "band", "key"
@@ -579,9 +555,9 @@ def minhash_dedup_pairs_cross(
     cand = _pin(
         bn.join(bc, ["band", "key"]).select("new_id", "corpus_id").distinct()
     )
-    # prune BOTH sides to candidate docs BEFORE tokenizing (round 15,
-    # guide §8): the semi applies to the raw (id, text) rows — the
-    # optimizer does not push a semi below the shingle projection (see
+    # prune BOTH sides to candidate docs BEFORE tokenizing: the semi
+    # applies to the raw (id, text) rows — the optimizer does not push
+    # a semi below the shingle projection (see
     # minhash_pairs_from_signatures), so pruning the array frames
     # would still tokenize every doc. Only candidate docs ever
     # shingle, and the final pair join runs over candidate-sized
@@ -708,8 +684,6 @@ def simhash_pairs(
             f" & {(1 << width) - 1} AS BIGINT)"
         )
 
-    from .features import _pin
-
     # routed through the FIFO pin registry (not a bare persist) so
     # repeated calls in one session cannot leak cached fingerprint
     # tables — the same discipline the minhash paths use
@@ -752,11 +726,10 @@ def simhash_pairs(
             .otherwise(F.col("key"))
             .alias("key"),
         )
-    # Round 15 (guide §2.4, the jaccard_pairs discipline): the banded
-    # rows are repartitioned by the self-join key once and pinned, so
-    # both join sides are co-partitioned reads of one cached relation
-    # (previously each side re-ran the band explode and paid its own
-    # exchange).
+    # The jaccard_pairs discipline: the banded rows are repartitioned
+    # by the self-join key once and pinned, so both join sides are
+    # co-partitioned reads of one cached relation instead of each
+    # re-running the band explode and paying its own exchange.
     keyed = _pin(keyed.repartition(F.col("band"), F.col("key")))
     a = keyed.select(F.col(id_col).alias("d1"), F.col("simhash").alias("f1"), "band", "key")
     b = keyed.select(F.col(id_col).alias("d2"), F.col("simhash").alias("f2"), "band", "key")
@@ -827,8 +800,6 @@ def hamming_pairs(
     # capped) and both join sides read it, and each read would otherwise
     # re-scan the source; the cached row is id + string + its segment
     # tiling (~3-4x the string), fine for record-linkage-sized columns
-    from .features import _pin
-
     base = _pin(
         df.select(
             F.col(id_col).alias("_id"),
@@ -1191,12 +1162,11 @@ def containment_pairs(
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     join_sh = sh
     if max_df is not None:
-        hot = (
+        hot = _checkpoint(
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_df"))
             .where(F.col("_df") > max_df)
             .select("shingle")
-            .localCheckpoint(eager=True)
         )
         n_hot = hot.count()
         if n_hot:
@@ -1407,7 +1377,7 @@ def dedup_survivorship(
 
     `pairs` (VERDICT r8 #1, pattern: cluster_keeper_from_pairs): a
     production run supplies the (d1, d2) pair graph — typically
-    minhash_dedup_pairs output, ideally localCheckpoint'ed and shared
+    minhash_dedup_pairs output, ideally checkpointed and shared
     with every other rollup (see dedup_report) — because the default
     exact-Jaccard discovery is quadratic in posting lists and exists
     as the gate-SF oracle, not the 100 TB plan."""
@@ -1522,7 +1492,7 @@ def dedup_report(
     + q196 + q180 at sf0.1; at 100 TB each re-derivation is a full
     corpus scan + LSH banding). Here the pair graph is discovered once
     (MinHash+LSH by default — the bucketed, capped scale path; pass
-    `pairs` to reuse an existing graph), localCheckpoint'ed so every
+    `pairs` to reuse an existing graph), checkpointed so every
     consumer reads materialized pair-cardinality blocks, and resolved
     to clusters by ONE connected-components run whose labels are
     themselves checkpoint-backed; the three corpus-facing rollups and
@@ -1548,7 +1518,7 @@ def dedup_report(
     full report then cost ONE discovery + ONE components pass total
     (test_keeper_and_report_share_one_components_pass). components
     REQUIRES pairs (the graph the labels were resolved from, already
-    localCheckpoint'ed by the caller — the cross-source section reads
+    checkpointed by the caller — the cross-source section reads
     it): deriving a fresh graph here would silently run a second
     discovery AND could disagree with the supplied labels, so that
     combination raises instead."""
@@ -1572,45 +1542,33 @@ def dedup_report(
 
         # materialize the pair graph ONCE; components, the histogram
         # and the cross-source rollup all read these (tiny) blocks
-        # instead of re-running the discovery pipeline. Checkpoint, NOT
-        # the _materialize_pairs pin: the minhash discovery's analyzed
-        # tree is ~280 nodes (winnow's is 34), and a pin leaves that
-        # full tree inside every consumer's logical plan — the report
-        # union re-analyzes it several times per run, a measured
-        # reproducible regression (pin 4.30 s vs ckpt 3.24 s median,
-        # 4-round interleaved A/B, round 15). The checkpoint truncates
-        # the plan to an ExistingRDD leaf (guide §3.3). Round 16: the
-        # checkpoint is LAZY and the size-probe count() materializes it
-        # — one job does both (the count cannot prune through the RDD
-        # barrier, so the blocks hold every column), and the count is
-        # forwarded so connected_components skips its own probe job
-        # and edge pin.
-        # (A pin UNDER the checkpoint — cross-run reuse of the
-        # discovery with consumers still truncated — was A/B'd in
-        # round 16 and regressed q199 warm ~20% (3.2 -> 4.0 s): the
-        # per-run InMemoryRelation scan+copy costs more than
-        # re-executing the banding join off the already-pinned bases.)
-        pairs = pairs.select("d1", "d2").localCheckpoint(eager=False)
+        # instead of re-running the discovery pipeline. Checkpointed,
+        # not pinned: the minhash discovery's analyzed tree is ~280
+        # nodes (winnow's is 34), and a pin leaves that full tree inside
+        # every consumer's logical plan, where the report union
+        # re-analyzes it several times per run. The checkpoint
+        # truncates the plan to an ExistingRDD leaf. It is LAZY and the
+        # size-probe count() materializes it — one job does both (the
+        # count cannot prune through the RDD barrier, so the blocks hold
+        # every column), and the count is forwarded so
+        # connected_components skips its own probe job and edge pin.
+        pairs = _checkpoint(pairs.select("d1", "d2"), eager=False)
         n_pairs = pairs.count()  # materializes the checkpoint blocks
         groups = dedup_groups(pairs, n_edges=n_pairs)
     # ONE long-format aggregation pass for survivorship + topline +
-    # cluster sizes (round 16, VERDICT r15 #3, guide §2.4): all three
-    # derive from the same (doc, source, keep_id) left join, so a
-    # grouping-sets aggregate computes the per-source survivorship rows
-    # ((source) set) and the per-cluster cardinalities ((keep_id) set)
-    # in one corpus pass and one exchange — the old shape paid a
-    # survivorship join+aggregate+checkpoint, a topline re-aggregate
-    # AND a histogram groupBy over the labels, each its own pass/
-    # exchange. The aggregate is (sources + clusters)-cardinality;
-    # its eager localCheckpoint (replacing the old survivorship
-    # checkpoint) lets the three report branches below read
+    # cluster sizes: all three derive from the same (doc, source,
+    # keep_id) left join, so a grouping-sets aggregate computes the
+    # per-source survivorship rows ((source) set) and the per-cluster
+    # cardinalities ((keep_id) set) in one corpus pass and one
+    # exchange. The aggregate is (sources + clusters)-cardinality; its
+    # eager checkpoint lets the three report branches below read
     # materialized rows. The topline still sums the survivorship rows
-    # (not a () grouping set: on an empty corpus the old global
-    # aggregate — and the DuckDB oracle — emit one all-NULL topline
-    # row, which a grouping set would not).
+    # (not a () grouping set: on an empty corpus a global aggregate —
+    # and the DuckDB oracle — emit one all-NULL topline row, which a
+    # grouping set would not).
     base = df.select(F.col(id_col).alias("doc_id"), F.col(source_col))
     joined = base.join(groups, "doc_id", "left")
-    ag = (
+    ag = _checkpoint(
         joined.groupingSets(
             [[F.col(source_col)], [F.col("keep_id")]],
             F.col(source_col),
@@ -1631,7 +1589,6 @@ def dedup_report(
             .cast("long")
             .alias("_drop"),
         )
-        .localCheckpoint(eager=True)
     )
     # grouping_id over (source, keep_id): (source) rows = 0b01, and
     # (keep_id) rows = 0b10 — a nulled grouping column is flag 1
@@ -1711,7 +1668,7 @@ def dedup_decision_report(
     winnowing graph reaches the same decision path the lexical
     capstones use.
 
-    The graph is localCheckpoint'ed HERE, once: the components loop,
+    The graph is materialized HERE, once: the components loop,
     the cross-source rollup, and nothing else re-derive the discovery
     pipeline (accumulator-asserted,
     test_decision_report_single_fingerprint_pass). Components run
@@ -1724,17 +1681,18 @@ def dedup_decision_report(
     drop list."""
     from .graph import connected_components
 
-    # Round 15: pinned, not checkpointed — identical logical plans
-    # share one cache entry, so the bench's warm runs (and any session
-    # re-building the same report) reuse the materialized discovery:
-    # measured 2.21 s vs 2.48 s checkpointed (4-round interleaved A/B,
-    # q204). Safe HERE because winnow_overlap_pairs' analyzed tree is
-    # ~34 nodes — unlike dedup_report's minhash tree (~280 nodes),
-    # where the same pin regressed planning time and the checkpoint
-    # stays (see dedup_report). Passing n_edges tells
-    # connected_components the graph is already materialized, so it
-    # skips its own edge pin.
-    pairs, n_pairs = _materialize_pairs(pairs.select("d1", "d2"))
+    # Pinned, not checkpointed: identical logical plans share one
+    # cache entry, so a session re-building the same report reuses the
+    # materialized discovery. Safe HERE because winnow_overlap_pairs'
+    # analyzed tree is ~34 nodes — unlike dedup_report's minhash tree
+    # (~280 nodes), where a pin costs planning time and the checkpoint
+    # stays. The count materializes the pin NOW, so the components
+    # pass and the cross-source rollup cannot race an unmaterialized
+    # cache into recomputing the discovery; passing it as n_edges
+    # tells connected_components the graph is already materialized, so
+    # it skips its own edge pin.
+    pairs = _pin(pairs.select("d1", "d2"))
+    n_pairs = pairs.count()
     comp = connected_components(pairs, "d1", "d2", n_edges=n_pairs)
     quality = df.select(
         F.col(id_col), F.col(quality_col).alias("quality")
@@ -1758,36 +1716,6 @@ def dedup_decision_report(
         F.lit(None).cast("double").alias("share"),
     )
     return report.unionByName(sec_keeper)
-
-
-def _materialize_pairs(pairs: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize a candidate-pair set for multi-consumer reuse.
-    Returns (pairs, n_rows) — the materializing count() is surfaced
-    (round 16) so callers that run connected components over the graph
-    can forward it and skip the loop's own size-probe job.
-
-    Round 15 (guide §5 persist-when-reused): PINNED instead of the old
-    eager localCheckpoint — identical logical plans share one
-    cache-manager entry, so a session re-building the same query (the
-    bench's median-of-3, a batch pipeline re-invoking the operator)
-    reuses the materialized discovery instead of re-running the whole
-    fingerprint/pairs pipeline per run (~2 s on q207/q208/q210 at
-    sf0.1; cold cost stays visible in first_run — the q20 band-row pin
-    discipline; MEMORY_AND_DISK + the FIFO registry bound storage).
-    The count() materializes NOW: the consumers (docs_in_play's
-    broadcast semi-join and the matches join in _run_streaks; the
-    components pass + cross-source rollup in dedup_decision_report)
-    must not race an unmaterialized cache into recomputing the
-    discovery. dedup_decision_report forwards the count as
-    connected_components' n_edges, which also skips its redundant
-    edge-projection pin. NOT used by dedup_report: its minhash
-    discovery tree is ~280 analyzed nodes, and pinning (instead of
-    checkpointing) leaves that tree in every report consumer's plan —
-    a measured planning-time regression (see dedup_report)."""
-    from .features import _pin
-
-    pairs = _pin(pairs)
-    return pairs, pairs.count()
 
 
 def _run_streaks(
@@ -1827,7 +1755,10 @@ def _run_streaks(
     # per _i, so a true run fragments below min_run and is silently
     # missed). Callers composing candidate sources (winnow + minhash
     # unions) hit this; the pair set is tiny, the shuffle is cheap.
-    pairs, _ = _materialize_pairs(pairs.select("d1", "d2").distinct())
+    pairs = _pin(pairs.select("d1", "d2").distinct())
+    # materialize NOW: docs_in_play's semi-join and the match join must
+    # not race an unmaterialized cache into recomputing the discovery
+    pairs.count()
     docs_in_play = (
         pairs.select(F.col("d1").alias(id_col))
         .unionByName(pairs.select(F.col("d2").alias(id_col)))
@@ -1842,24 +1773,21 @@ def _run_streaks(
         F.col(id_col),
         F.posexplode(_ngrams(F.col("toks"), k)).alias("_pos", "_g"),
     ).select(id_col, "_pos", md5_token_hash(F.col("_g")).alias("_h"))
-    # Round 15 (guide §2.4, the jaccard_pairs/self_trim discipline):
-    # candidate-doc grams are repartitioned by (doc, hash) ONCE and
-    # pinned — the degenerate-gram census groupBy needs no further
-    # exchange, the g2 join side is already partitioned on its
-    # (d2, _h) key, and the tokenize+posexplode+md5 pipeline executes
-    # once instead of once per consumer. Pin size is bounded by the
+    # The jaccard_pairs/self_trim discipline: candidate-doc grams are
+    # repartitioned by (doc, hash) ONCE and pinned — the degenerate-gram
+    # census groupBy needs no further exchange, the g2 join side is
+    # already partitioned on its (d2, _h) key, and the
+    # tokenize+posexplode+md5 pipeline executes once instead of once
+    # per consumer. Pin size is bounded by the
     # candidate docs' token count (the semi-join prune above), never
     # the corpus.
-    from .features import _pin
-
     grams = _pin(grams.repartition(F.col(id_col), F.col("_h")))
     if max_gram_freq is not None:
-        hot = (
+        hot = _checkpoint(
             grams.groupBy(id_col, "_h")
             .agg(F.count(F.lit(1)).alias("_c"))
             .where(F.col("_c") > max_gram_freq)
             .select(id_col, "_h")
-            .localCheckpoint(eager=True)
         )
         n_hot = hot.count()
         if n_hot:
@@ -2141,14 +2069,13 @@ def _trim_until_fixpoint(
     (`per_doc=False`): a cut in d1 can splice a new run shared with an
     otherwise-untouched d2.
 
-    Each pass is localCheckpoint'ed (eager): the loop's driver-side
+    Each pass is checkpointed (eager): the loop's driver-side
     convergence check would otherwise replay the whole lineage every
     iteration, and the checkpoint bounds the plan for the next pass.
-    Superseded pass checkpoints are released immediately (graph.py's
-    _release_checkpoint — the blocks here are CORPUS-sized, id +
-    full rebuilt text per doc, so leaving up to 2 block sets per pass
-    to the lazy ContextCleaner risks executor storage at scale;
-    code-review r12). Output contract is the family's: n_tokens =
+    Superseded pass checkpoints are released immediately (_release —
+    the blocks here are CORPUS-sized, id + full rebuilt text per doc,
+    so leaving up to 2 block sets per pass to the lazy ContextCleaner
+    risks executor storage at scale). Output contract is the family's: n_tokens =
     ORIGINAL token count, n_trimmed = TOTAL tokens cut across all
     passes, new_text = final.
 
@@ -2158,9 +2085,7 @@ def _trim_until_fixpoint(
     hit) — the sf1 probe reads len()/values to put n_passes and
     per-pass cost at a measured decade on record. Driver-side only;
     the counts come from the aggs the loop already runs."""
-    from .graph import _release_checkpoint
-
-    acc = trim_once(df).localCheckpoint(eager=True)
+    acc = _checkpoint(trim_once(df))
     cur = acc
     passes = 1
     while passes < max_passes:
@@ -2176,8 +2101,8 @@ def _trim_until_fixpoint(
             id_col,
         )).select(F.col(id_col), F.col("new_text").alias(text_col))
         prev_acc, prev_cur = acc, cur
-        cur = trim_once(redo_in).localCheckpoint(eager=True)
-        acc = (
+        cur = _checkpoint(trim_once(redo_in))
+        acc = _checkpoint(
             acc.join(
                 cur.select(
                     F.col(id_col),
@@ -2195,14 +2120,13 @@ def _trim_until_fixpoint(
                 ).cast("long").alias("n_trimmed"),
                 F.coalesce("_txt2", "new_text").alias("new_text"),
             )
-            .localCheckpoint(eager=True)
         )
         # the new acc/cur are independently materialized; the previous
         # pass's blocks are never read again (pass 1: prev_acc IS
         # prev_cur, released once)
-        _release_checkpoint(prev_acc)
+        _release(prev_acc)
         if prev_cur is not prev_acc:
-            _release_checkpoint(prev_cur)
+            _release(prev_cur)
         passes += 1
     last = cur.agg(F.sum("n_trimmed")).first()[0] or 0
     if pass_stats is not None:
@@ -2352,23 +2276,20 @@ def self_trim_repeats(
         F.col(id_col),
         F.posexplode(_ngrams(F.col("toks"), k)).alias("_pos", "_g"),
     ).select(id_col, "_pos", md5_token_hash(F.col("_g")).alias("_h"))
-    # Round 15 (guide §2.4, the jaccard_pairs discipline): the gram
-    # table is repartitioned by the self-join key ONCE and pinned —
-    # the (doc, hash) census groupBy and both join sides consume the
-    # same partitioning, so the gram stream crosses one exchange
-    # instead of three, and the tokenize+posexplode+md5 pipeline
-    # executes once, not 3x. (The streak window re-keys on
-    # (doc, diag) — match-cardinality rows, far fewer than grams.)
-    from .features import _pin
-
+    # The jaccard_pairs discipline: the gram table is repartitioned by
+    # the self-join key ONCE and pinned — the (doc, hash) census
+    # groupBy and both join sides consume the same partitioning, so the
+    # gram stream crosses one exchange instead of three, and the
+    # tokenize+posexplode+md5 pipeline executes once, not 3x. (The
+    # streak window re-keys on (doc, diag) — match-cardinality rows,
+    # far fewer than grams.)
     grams = _pin(grams.repartition(F.col(id_col), F.col("_h")))
     if max_gram_freq is not None:
-        hot = (
+        hot = _checkpoint(
             grams.groupBy(id_col, "_h")
             .agg(F.count(F.lit(1)).alias("_c"))
             .where(F.col("_c") > max_gram_freq)
             .select(id_col, "_h")
-            .localCheckpoint(eager=True)
         )
         n_hot = hot.count()
         if n_hot:
@@ -2441,13 +2362,12 @@ def _decontaminate_streaks(
     fb = winnow_fingerprints(b, k, w, "_nid", text_col)
     ft = winnow_fingerprints(t, k, w, "_nid", text_col)
     if max_df is not None:
-        hot = (
+        hot = _checkpoint(
             fb.unionByName(ft)
             .groupBy("fp")
             .agg(F.count(F.lit(1)).alias("_df"))
             .where(F.col("_df") > max_df)
             .select("fp")
-            .localCheckpoint(eager=True)
         )
         n_hot = hot.count()
         if n_hot:
@@ -2593,10 +2513,8 @@ def benchmark_coverage(
     )
     # runs feeds THREE consumers (per-pair stats, bench-side spans,
     # coverage) — pinned so the whole streak pipeline executes once,
-    # not once per consumer (round 15; run rows are span-cardinality,
-    # tiny at any scale)
-    from .features import _pin
-
+    # not once per consumer (run rows are span-cardinality, tiny at
+    # any scale)
     runs = _pin(runs)
     per_pair = runs.groupBy("d1", "d2").agg(F.max("_run").alias("_lr"))
     stats = per_pair.groupBy("d1").agg(
@@ -2906,26 +2824,21 @@ def winnow_overlap_pairs(
     Output: (d1, d2, n_shared), d1 < d2, all exact integers."""
     from pyspark.sql import Window
 
-    # Round 15 (guide §2.4, the jaccard_pairs discipline): the
-    # fingerprint table is repartitioned by the self-join key ONCE and
-    # pinned — both join sides (and the max_df census) read one cached
-    # co-partitioned relation instead of each re-running the
-    # tokenize -> gram -> window-min -> distinct pipeline (the q201
-    # plan previously carried the whole winnow subtree TWICE with zero
-    # exchange reuse).
-    from .features import _pin
-
+    # The jaccard_pairs discipline: the fingerprint table is
+    # repartitioned by the self-join key ONCE and pinned — both join
+    # sides (and the max_df census) read one cached co-partitioned
+    # relation instead of each re-running the tokenize -> gram ->
+    # window-min -> distinct pipeline.
     fps = _pin(
         winnow_fingerprints(df, k, w, id_col, text_col).repartition(F.col("fp"))
     )
     join_fps = fps
     if max_df is not None:
-        hot = (
+        hot = _checkpoint(
             fps.groupBy("fp")
             .agg(F.count(F.lit(1)).alias("_df"))
             .where(F.col("_df") > max_df)
             .select("fp")
-            .localCheckpoint(eager=True)
         )
         n_hot = hot.count()
         if n_hot:

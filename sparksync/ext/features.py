@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._materialize import _pin
+
 
 def normalize_by_group(
     df: DataFrame,
@@ -301,104 +303,6 @@ def rank_normalize(
         F.col(value_col).cast("double"), id_col
     )
     return df.withColumn(out_col, F.percent_rank().over(w))
-
-
-# Relations pinned by global_rank/global_cumsum (the range-sampler
-# alignment caches). A long-lived session chaining many calls (e.g.
-# rfm_segments pins three per invocation) would otherwise accumulate
-# cached relations until executor storage evicts them: pins are FIFO
-# with a small cap, and release_pinned() drops them all between batch
-# runs. Eviction is materialization-aware (ADVICE r5): for
-# global_rank/global_cumsum the persist is correctness-critical until
-# the first action (without it the rank and offset subtrees can draw
-# different repartitionByRange sample bounds and misalign), so only
-# pins whose column buffers have actually been loaded are evicted
-# silently; an un-materialized pin is evicted only past the 4x hard
-# cap, with a loud warning.
-_PINNED: list = []
-_PIN_CAP = 16
-_PIN_HARD_CAP = 64
-
-
-def _cached_data(df: DataFrame):
-    """The java CachedData entry backing this relation, or None when
-    the relation is not in the cache manager (never persisted, or
-    already unpersisted — a dead pin)."""
-    try:
-        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-        opt = cm.lookupCachedData(df._jdf)
-        return None if opt.isEmpty() else opt.get()
-    except Exception:
-        return None
-
-
-def _pin_state(df: DataFrame) -> str:
-    """'dead' (no cache entry — unpersisted out from under us),
-    'unmat' (cached but the column buffers never loaded: evicting
-    would let a not-yet-run plan recompute with different
-    range-sampler bounds), or 'mat' (buffers loaded; safe to evict).
-    Fails open to 'mat': if the internal cache-manager probe breaks on
-    a Spark upgrade, eviction degrades to plain FIFO instead of
-    leaking pins."""
-    try:
-        cd = _cached_data(df)
-        if cd is None:
-            return "dead"
-        loaded = cd.cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
-        return "mat" if loaded else "unmat"
-    except Exception:
-        return "mat"
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    # Identical logical plans share ONE cache-manager entry (persist on
-    # an already-cached plan is a no-op). A duplicate registry row for
-    # a shared entry is a hazard: evicting the old row unpersists the
-    # NEW pin too. Refresh the existing row's recency instead.
-    cd = _cached_data(df)
-    if cd is not None:
-        for i, (d, c) in enumerate(_PINNED):
-            if c is not None and cd.equals(c):
-                _PINNED.append(_PINNED.pop(i))
-                return df
-    _PINNED.append((df, cd))
-    # purge rows whose cache entry is gone (unpersisted externally or
-    # via a shared-entry eviction) — nothing left to release
-    _PINNED[:] = [(d, c) for d, c in _PINNED if _pin_state(d) != "dead"]
-    while len(_PINNED) > _PIN_CAP:
-        victim_i = next(
-            (i for i, (d, c) in enumerate(_PINNED) if _pin_state(d) == "mat"),
-            None,
-        )
-        if victim_i is None:
-            if len(_PINNED) > _PIN_HARD_CAP:
-                import warnings
-
-                warnings.warn(
-                    "sparksync: evicting an UN-materialized correctness pin "
-                    f"(> {_PIN_HARD_CAP} live un-materialized pins). A plan "
-                    "built on the evicted relation may recompute with "
-                    "different range-sampler bounds; materialize or "
-                    "release_pinned() between batches.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                _PINNED.pop(0)[0].unpersist(blocking=False)
-                continue
-            break  # soft cap: keep un-materialized pins alive
-        _PINNED.pop(victim_i)[0].unpersist(blocking=False)
-    return df
-
-
-def release_pinned() -> None:
-    """Unpersist every relation pinned by global_rank/global_cumsum.
-    Call between batch runs in a long-lived session (after the
-    returned DataFrames have been materialized)."""
-    while _PINNED:
-        _PINNED.pop()[0].unpersist(blocking=False)
 
 
 def global_rank(

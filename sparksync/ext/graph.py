@@ -11,15 +11,10 @@ Each round is one join + one groupBy, both shuffling on the node key;
 each round's labels are persisted and the convergence count is FUSED
 into the job that materializes them (one job per round). Lineage
 doubles every round (the join and the union both embed the previous
-round's plan), so every _TRUNC_EVERY-th round localCheckpoints eagerly
+round's plan), so every _TRUNC_EVERY-th round checkpoints eagerly
 to truncate the plan — without any truncation the driver OOMs just
 *printing* the plan past ~10 rounds. The previous round's blocks are
-explicitly unpersisted, so state never accumulates.
-
-On a multi-node cluster localCheckpoint stores shuffle-output blocks on
-executors (lost with the executor); for very long-running jobs swap in
-`sc.setCheckpointDir` + `.checkpoint()` for fault-tolerant truncation —
-the loop structure is identical.
+explicitly released, so state never accumulates.
 """
 
 from __future__ import annotations
@@ -30,7 +25,7 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 
 # fused rounds keep lineage (cache-backed execution, but the logical
-# plan doubles per round); every _TRUNC_EVERY-th round localCheckpoints
+# plan doubles per round); every _TRUNC_EVERY-th round checkpoints
 # to truncate it, bounding plan depth at 2^_TRUNC_EVERY tiny subtrees
 _TRUNC_EVERY = 5
 
@@ -114,22 +109,6 @@ def _local_components(
     return local_frame(spark, sorted(labels.items()), schema)
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint'ed DataFrame's storage blocks NOW.
-
-    ``DataFrame.unpersist()`` only talks to the CacheManager and is a
-    no-op for checkpoint blocks (they are persisted directly on the
-    internal RDD), which would leave one labels-sized block set per
-    round until the ContextCleaner gets to them. The LogicalRDD at the
-    root of a checkpointed plan exposes that RDD; unpersisting it is
-    safe once the df is never read again. Best-effort: on any py4j /
-    plan-shape surprise we fall back to the (lazy) ContextCleaner."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        df.unpersist()
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "d1",
@@ -161,7 +140,7 @@ def connected_components(
     materializes it, so a round costs one Spark job. A persisted round
     references the previous round's plan (the LOGICAL plan doubles per
     round since self-rows + messages both embed it), so every
-    _TRUNC_EVERY-th round localCheckpoints eagerly instead: plan depth
+    _TRUNC_EVERY-th round checkpoints eagerly instead: plan depth
     stays bounded by 2^_TRUNC_EVERY tiny subtrees at any iteration
     count.
 
@@ -171,7 +150,7 @@ def connected_components(
     skipped. Pass it only with a materialized graph — a lazy discovery
     plan would then re-run once per consumer — and only with the real
     row count, which bounds the driver-local collect."""
-    from pyspark import StorageLevel
+    from ._materialize import _checkpoint, _persist, _pin, _release
 
     # A lazy `edges` is typically a whole discovery pipeline (minhash
     # LSH banding + verify, cosine scoring, ...), so its (src, dst)
@@ -184,8 +163,6 @@ def connected_components(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e_pinned = n_edges is None
     if e_pinned:
-        from .features import _pin
-
         e = _pin(e)
     und_plan = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -221,10 +198,9 @@ def connected_components(
                 # the pinned edge projection was only probed/collected;
                 # nothing reads it again — drop the cache blocks now
                 # instead of waiting for the FIFO registry to age them
-                # out (the registry's later unpersist of the same df is
-                # a no-op)
+                # out
                 if e_pinned:
-                    e.unpersist(False)
+                    _release(e)
                 return local
     # materialize the undirected pair graph ONCE, EAGERLY: every
     # propagation round below reads `und`, and the checkpoint also
@@ -232,18 +208,18 @@ def connected_components(
     # persist here kept the discovery's expression tree in every fused
     # round's analysis, and concurrent scans of the not-yet-built cache
     # raced into re-computing the discovery).
-    und = und_plan.localCheckpoint(eager=True)
+    und = _checkpoint(und_plan)
     # init folds the FIRST propagation hop into label creation: every
     # node starts at min(self, min neighbor) — one groupBy instead of a
-    # distinct + a full first round (round-7 fixed-cost trim). Lazy
-    # persist over `und`'s materialized blocks (a tiny plan): round 1's
-    # fused job fills it, so no dedicated init-materialization job runs.
-    labels = (
-        und.groupBy(F.col("a").alias("node"))
-        .agg(F.least(F.min("b"), F.col("a")).alias("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # distinct + a full first round. Lazy persist over `und`'s
+    # materialized blocks (a tiny plan): round 1's fused job fills it,
+    # so no dedicated init-materialization job runs.
+    labels = _persist(
+        und.groupBy(F.col("a").alias("node")).agg(
+            F.least(F.min("b"), F.col("a")).alias("label")
+        )
     )
-    ckpt, ckpt_is_checkpoint = labels, False
+    ckpt = labels
     changed = 0
     for rounds in range(1, max_iter + 1):
         # one propagation hop per round; the OLD label rides along the
@@ -264,31 +240,27 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"), F.max("old").alias("old"))
         )
-        truncate = rounds % _TRUNC_EVERY == 0
-        if truncate:
+        if rounds % _TRUNC_EVERY == 0:
             # periodic lineage truncation round: checkpoint, then count
-            stepped = stepped.localCheckpoint(eager=True)
+            stepped = _checkpoint(stepped)
         else:
             # fused round: the count below is the ONE job that both
             # materializes the cache and returns the convergence count
             # (the filter scans every partition, so the InMemoryRelation
             # is fully built by it)
-            stepped = stepped.persist(StorageLevel.MEMORY_AND_DISK)
+            stepped = _persist(stepped)
         changed = stepped.where(F.col("label") != F.col("old")).count()
         # old round's blocks are never read again (stepped is already
         # materialized), so dropping them is safe. Release the df that
         # HOLDS the blocks, not the projection over it.
-        if ckpt_is_checkpoint:
-            _release_checkpoint(ckpt)
-        else:
-            ckpt.unpersist(False)
-        ckpt, ckpt_is_checkpoint = stepped, truncate
+        _release(ckpt)
+        ckpt = stepped
         labels = stepped.select("node", "label")
         if changed == 0:
             break
     # the loop never reads the pair graph again; labels is independently
     # materialized, so the graph's blocks can go now
-    _release_checkpoint(und)
+    _release(und)
     if changed > 0:
         msg = (
             f"connected_components did not converge in {max_iter} rounds "
@@ -296,10 +268,7 @@ def connected_components(
             f"max_iter; labels are partially merged"
         )
         if strict:
-            if ckpt_is_checkpoint:
-                _release_checkpoint(ckpt)
-            else:
-                ckpt.unpersist(False)
+            _release(ckpt)
             raise RuntimeError(msg)
         import warnings
 

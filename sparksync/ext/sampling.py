@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._materialize import _pin
+
 BUCKETS = 10_000
 _KNUTH_A = 2654435761
 
@@ -1126,15 +1128,13 @@ def domain_reweight(
     from it are dropped, mirroring budget_mix's contract.
 
     Scale shape: ONE corpus scan into a partial-agg groupBy(domain) —
-    the domains-sized result is PINNED (features._pin) because four
+    the domains-sized result is PINNED (_pin) because four
     downstream consumers (the prior count, the min/max range, the
     normalizer and the final projection) each re-derive it; unpinned,
-    the physical plan read the corpus EIGHT times (plan-audited round
-    14, the q219 lesson). Everything after the pin is domains-sized.
+    the physical plan read the corpus EIGHT times (plan-audited, the
+    q219 lesson). Everything after the pin is domains-sized.
     Output: (group, n_docs, mean_loss, prior_w, weight), weights
     summing to 1."""
-    from .features import _pin
-
     if eta < 0:
         raise ValueError(f"eta must be >= 0, got {eta}")
     d = df.where(F.col(loss_col).isNotNull())
@@ -1258,8 +1258,6 @@ def length_bucket_packing(
     <=64-row table), the diversity/HLL pattern, so the streaming twin
     (ext/stream.length_bucket_stream) maintains the same state and
     reads the same finisher."""
-    from .features import _pin
-
     return length_bucket_finish(_pin(length_bucket_state(df, text_col)))
 
 

@@ -17,9 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..session import local_frame
+from ._materialize import _pin
 
 
 def _to_double(col: Column) -> Column:
@@ -236,11 +236,12 @@ def _lsh_scored_pairs(
         )
     # One struct per band carrying (band, bucket, nxt) where nxt is the
     # NEXT band's value, used for bucket-cap re-splitting. The projected
-    # (id, v, cells) row is PERSISTED before fan-out: the size census and
+    # (id, v, cells) row is PINNED before fan-out: the size census and
     # both join sides read it, and each read would otherwise re-run all
     # n_planes dot products over the full corpus (measured 3x projection
     # cost at sf0.1). Cache row = vector + n_bands longs, i.e. barely
-    # more than the input the executors already hold.
+    # more than the input the executors already hold; the pin registry
+    # frees it, so repeated calls cannot leak one cache per input.
     #
     # The one-element-array transform is a let-binding: the 32-dot bits
     # array evaluates ONCE per row, then all n_bands (bucket, nxt)
@@ -264,20 +265,14 @@ def _lsh_scored_pairs(
         ),
         1,
     )
-    hashed = e.select(id_col, "v", cells.alias("_cells")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Round 15 (guide §8 "decide with small rows, move big rows
-    # once"): the banded self-join and the pair dedup used to carry
-    # the full double[dim] vector on BOTH sides — every vector
-    # shuffled n_bands times into the join and the survivors again
-    # through the dropDuplicates exchange. The join now decides on
-    # (id, band, bucket) rows only; vectors are attached to the
-    # DEDUPED pair set by two joins against the persisted `hashed`
-    # projection the executors already hold. Output identical
-    # (va/vb are functions of d1/d2); local A/B neutral at sf0.1
-    # (3.82 vs 3.74 s on q178), network bytes at scale drop by
-    # ~n_bands * vector width per row.
+    hashed = _pin(e.select(id_col, "v", cells.alias("_cells")))
+    # Decide with small rows, move big rows once: the banded self-join
+    # and the pair dedup decide on (id, band, bucket) rows only, and
+    # vectors are attached to the DEDUPED pair set by two joins against
+    # the pinned `hashed` projection the executors already hold —
+    # carrying the full double[dim] vector through the join would
+    # shuffle every vector n_bands times, and the survivors again
+    # through the dropDuplicates exchange.
     keyed = hashed.select(id_col, F.explode("_cells").alias("bk")).select(
         id_col,
         F.col("bk.band").alias("band"),
@@ -1159,10 +1154,10 @@ def ivf_recall_audit(
 
     Two LOGICAL corpus passes (one exact, one pruned — both broadcast
     the query set and rank per-query in parallel); the input is PINNED
-    (features._pin, the FIFO registry) because the exact and pruned
+    (_pin, the FIFO registry) because the exact and pruned
     sides re-derive corpus/centroid/query frames from `emb`
     independently — unpinned, the physical plan reads the source NINE
-    times (plan-audited r13), and at 100 TB nine corpus scans vs one
+    times (plan-audited), and at 100 TB nine corpus scans vs one
     is the whole game. The pair-of-top-k joins are |queries| x k sized
     and broadcast. Output: (query_id, n_hits, recall_at_k), one row
     per query; the mean over queries is the headline the caller
@@ -1171,8 +1166,6 @@ def ivf_recall_audit(
     a corpus smaller than k still reads 1.0 instead of a phantom
     recall deficit (ADVICE r13 — matches the minhash-recall audit's
     convention)."""
-    from .features import _pin
-
     # pin the PROJECTION, not the input row: the audit only ever reads
     # (id, vector), and at corpus scale the cached bytes are the cost
     emb = _pin(emb.select(F.col(id_col), F.col(vec_col)))
@@ -1723,8 +1716,6 @@ def pq_recall_audit(
     unpinned, the plan reads the source many times). recall divides
     by the per-query TRUTH count, not the literal k (the ADVICE r13
     convention). Output: (query_id, n_hits, recall_at_k)."""
-    from .features import _pin
-
     emb = _pin(emb.select(F.col(id_col), F.col(vec_col)))
     e = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
     # ONE bounded collect serves the exact side's query relation (a

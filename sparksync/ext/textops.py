@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+from ._materialize import _checkpoint, _pin, _release
 
 #: stopword list used by the quality heuristic (kept tiny + explicit so
 #: the DuckDB oracle can repeat it verbatim)
@@ -211,7 +212,7 @@ def boilerplate_score(
     Scale shape: per-doc DISTINCT grams (explode bounded by unique-
     grams-per-doc), ONE hash-partitioned df census with map-side
     partial agg whose heavy-hitter-bounded hot set (<= total postings
-    / min_df rows) is eagerly localCheckpoint'ed — the census subtree
+    / min_df rows) is eagerly checkpointed — the census subtree
     would otherwise ride inside the main branch and the corpus-sized
     gram explode would execute TWICE more than needed (the q20
     signature-reuse lesson: lambda-bearing subtrees defeat exchange
@@ -220,7 +221,7 @@ def boilerplate_score(
     ONE gram pass: left join against the tiny hot set, ONE per-doc
     groupBy counting both totals, LEFT join to the corpus so short
     docs (< k tokens) pass through at zero. Eager by contract, like
-    jaccard_pairs' max_df census; the gram pin rides features._pin's
+    jaccard_pairs' max_df census; the gram pin rides _pin's
     FIFO-capped registry (release_pinned() drops it between batch
     runs), never a raw session-lifetime persist. Gram identity is
     md5_token_hash for oracle
@@ -253,21 +254,18 @@ def boilerplate_score(
     # the gram table is read exactly twice (census, main branch) and
     # its subtree carries lambdas that defeat exchange reuse — pin it
     # so the tokenize+explode+md5 pass runs ONCE (the q20 signature
-    # lesson; MEMORY_AND_DISK spills rather than recomputes). features.
-    # _pin, not a raw persist: persist registers in the CacheManager,
-    # which the ContextCleaner never reclaims, so repeated calls in a
-    # long session would leak one corpus-sized cache per call — the
-    # FIFO-capped pin registry exists for exactly this (code-review
-    # r12). The hot build's eager checkpoint materializes it.
-    from .features import _pin
-
+    # lesson; MEMORY_AND_DISK spills rather than recomputes). _pin, not
+    # _persist: a persist registers in the CacheManager, which the
+    # ContextCleaner never reclaims, so repeated calls in a long
+    # session would leak one corpus-sized cache per call — the
+    # FIFO-capped pin registry exists for exactly this. The hot
+    # build's eager checkpoint materializes it.
     grams = _pin(grams)
-    hot = (
+    hot = _checkpoint(
         grams.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_df"))
         .where(F.col("_df") > min_df)
         .select("_h", F.lit(1).alias("_hot"))
-        .localCheckpoint(eager=True)
     )
     per = (
         grams.join(hot, "_h", "left")
@@ -1066,9 +1064,8 @@ def bpe_train(
     groupBy + argmax (a ONE-row driver collect, the n_sources-row
     handoff discipline) + a narrow literal string replace. The replaces
     accumulate as chained lazy projections over the ONE checkpointed
-    base vocabulary (one Spark job per merge, round 15 — was argmax +
-    an eager per-round checkpoint, two jobs); every _BPE_TRUNC_EVERY
-    merges a real localCheckpoint (previous blocks explicitly released,
+    base vocabulary (one Spark job per merge); every _BPE_TRUNC_EVERY
+    merges a real checkpoint (previous blocks explicitly released,
     the ext/graph.py iterative-loop pattern) truncates the chain, so
     lineage stays bounded at any merge count.
 
@@ -1087,8 +1084,6 @@ def bpe_train(
     would need a codepoint split on both engines."""
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
-    from .graph import _release_checkpoint
-
     sep = _BPE_SEP
     dd = sep + sep
     words = (
@@ -1097,26 +1092,29 @@ def bpe_train(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wf"))
     )
-    # lazy checkpoint + count (round 16, the dedup_report fusion): one
-    # job materializes the vocabulary AND reports its size for the
+    # lazy checkpoint + count (the dedup_report fusion): one job
+    # materializes the vocabulary AND reports its size for the
     # local-loop switch below (the count cannot prune through the RDD
     # barrier, so the blocks hold both columns)
-    vocab = words.select(
-        F.concat(
-            F.lit(dd),
-            F.concat_ws(
-                dd, F.filter(F.split("w", ""), lambda x: x != F.lit(""))
-            ),
-            F.lit(dd),
-        ).alias("s"),
-        "wf",
-    ).localCheckpoint(eager=False)
+    vocab = _checkpoint(
+        words.select(
+            F.concat(
+                F.lit(dd),
+                F.concat_ws(
+                    dd, F.filter(F.split("w", ""), lambda x: x != F.lit(""))
+                ),
+                F.lit(dd),
+            ).alias("s"),
+            "wf",
+        ),
+        eager=False,
+    )
     n_vocab = vocab.count()
     if 0 < _BPE_LOCAL_MAX_VOCAB and n_vocab <= _BPE_LOCAL_MAX_VOCAB:
         # driver-local loop: one collect of the (bounded) encoded
         # vocabulary replaces num_merges argmax jobs + 1-row collects
         rows = [(r[0], r[1]) for r in vocab.collect()]
-        _release_checkpoint(vocab)
+        _release(vocab)
         return local_frame(
             df.sparkSession,
             _local_bpe_merges(rows, num_merges),
@@ -1124,10 +1122,10 @@ def bpe_train(
             " cnt long",
         )
     merges: list[tuple[int, str, str, str, int]] = []
-    # Fused loop (round 15, guide §1.2 fixed-cost trim): the merge
-    # replace is a NARROW vocab-row projection, so instead of eagerly
-    # checkpointing the merged vocabulary every round (one extra Spark
-    # job per merge), the accumulated merges ride each argmax job as
+    # Fused loop: the merge replace is a NARROW vocab-row projection,
+    # so instead of eagerly checkpointing the merged vocabulary every
+    # round (one extra Spark job per merge), the accumulated merges
+    # ride each argmax job as
     # chained lazy replace()s over the ONE checkpointed base — exactly
     # bpe_segment's chained-replace form, which is exact greedy merge
     # application in step order. One job per merge instead of two;
@@ -1171,11 +1169,11 @@ def bpe_train(
             )
             pending += 1
             if pending >= _BPE_TRUNC_EVERY and step < num_merges:
-                nxt = cur.localCheckpoint(eager=True)
-                _release_checkpoint(vocab)
+                nxt = _checkpoint(cur)
+                _release(vocab)
                 vocab, cur, pending = nxt, nxt, 0
     finally:
-        _release_checkpoint(vocab)
+        _release(vocab)
     return local_frame(
         df.sparkSession,
         merges,
@@ -1770,22 +1768,19 @@ def _lm_base(
     (id[, _tgt], _w, _w2, _k); and the one-row smoothing denominator
     |vocab| + 1.
 
-    Round 15 (guide §5 persist-when-reused; the change-2 shingle-pin
-    discipline): the mapped-bigram table (`big`) feeds THREE
+    Persist-when-reused: the mapped-bigram table (`big`) feeds THREE
     aggregations in ngram_lm_score (stats, the c12 model build, and
     the scoring join's types side) and the census feeds two more (the
-    membership broadcast + veff) — all lazy, so one run executed the
-    tokenize + census + vocab-map + window pipeline ~3x and the
-    census ~2x (lambda-bearing subtrees defeat exchange reuse,
-    plan-audited: zero ReusedExchange). Both are now pinned
-    (features._pin: MEMORY_AND_DISK, FIFO-capped registry) and `big`
-    is materialized with a count() so the three consumers cannot race
-    an unmaterialized cache into recomputing the pass (the change-1
-    gotcha). Pin storage is bigram-row-scale — the same order as the
-    shuffle the c12 aggregation writes from those rows anyway (the
-    change-2 trade) — and the census is <= vocab_k rows. Warm runs
-    (the bench's median-of-3, or any session re-scoring the same
-    corpus) reuse both pins; cold cost stays visible in first_run."""
+    membership broadcast + veff); unpinned, one run executes the
+    tokenize + census + vocab-map + window pipeline ~3x and the census
+    ~2x (lambda-bearing subtrees defeat exchange reuse, plan-audited:
+    zero ReusedExchange). Both are pinned (_pin: MEMORY_AND_DISK,
+    FIFO-capped registry) and `big` is materialized with a count() so
+    the three consumers cannot race an unmaterialized cache into
+    recomputing the pass. Pin storage is bigram-row-scale — the same
+    order as the shuffle the c12 aggregation writes from those rows
+    anyway — and the census is <= vocab_k rows. A session re-scoring
+    the same corpus reuses both pins."""
     keep = [F.col(id_col)]
     gcols = [id_col]
     if flag is not None:
@@ -1798,8 +1793,6 @@ def _lm_base(
     vocab = lm_vocab_census(df, vocab_k, text_col, n_salts).select(
         F.col("tok").alias("_tok")
     )
-    from .features import _pin
-
     # materialized as a side effect of big.count() below (the census is
     # a subtree of `big`'s plan), so no dedicated job
     vocab = _pin(vocab)
@@ -2172,10 +2165,10 @@ def lm_score_against_model(
     two-phase top-k. Output: (id, n_tokens, n_unk, n_bigrams,
     lm_surprisal), most surprising first.
 
-    EAGER at composition time (round 16): `counts` is materialized
-    with one localCheckpoint when the plan is BUILT, so a lazy counts
-    pipeline executes once here instead of once per consumer (context
-    table + model projection) — the same build-time contract as
+    EAGER at composition time: `counts` is materialized with one
+    checkpoint when the plan is BUILT, so a lazy counts pipeline
+    executes once here instead of once per consumer (context table +
+    model projection) — the same build-time contract as
     ngram_lm_score / lm_target_affinity.
 
     `vocab` is deduplicated at entry (order-preserving), the same
@@ -2327,19 +2320,18 @@ def lm_score_against_model(
     # memory table) Spark cannot deduplicate the self-join's shared
     # attribute ids — the fresh Aliases break the reference sharing.
     #
-    # Round 16 (guide §2.4/§5): counts is materialized ONCE with an
-    # eager localCheckpoint before its two consumers (c1, model)
-    # render it. When the caller passes a LAZY counts plan — q203
-    # passes the full lm_bigram_counts train-side pipeline — both
-    # consumers previously re-executed that tokenize+pairs+groupBy
-    # corpus pass (its zip_with/transform lambdas defeat
-    # ReusedExchange; plan-audited: two 'Scan parquet documents'
-    # subtrees under model and c1). The checkpointed table is the
-    # bounded model state itself (<= (len(vocab)+1)^2 rows, the same
-    # bound that makes it broadcastable), computed once per call —
+    # counts is materialized ONCE with an eager checkpoint before its
+    # two consumers (c1, model) render it. When the caller passes a
+    # LAZY counts plan — q203 passes the full lm_bigram_counts
+    # train-side pipeline — both consumers would otherwise re-execute
+    # that tokenize+pairs+groupBy corpus pass (its zip_with/transform
+    # lambdas defeat ReusedExchange; plan-audited: two 'Scan parquet
+    # documents' subtrees under model and c1). The checkpointed table
+    # is the bounded model state itself (<= (len(vocab)+1)^2 rows, the
+    # same bound that makes it broadcastable), computed once per call —
     # this makes plan COMPOSITION eager for the model side, same
     # documented contract as ngram_lm_score's _lm_base pin.
-    counts = counts.localCheckpoint(eager=True)
+    counts = _checkpoint(counts)
     c1 = (
         counts.select(F.col("w").alias("w"), F.col("cnt").alias("cnt"))
         .groupBy("w")

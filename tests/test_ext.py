@@ -2678,10 +2678,10 @@ def test_pin_registry_caps_and_releases(spark):
     """global_rank/global_cumsum pins are FIFO-capped and releasable
     (ADVICE r4: unbounded MEMORY_AND_DISK accumulation in long-lived
     sessions)."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize, features
 
-    features.release_pinned()
-    assert features._PINNED == []
+    _materialize.release_pinned()
+    assert _materialize._PINNED == []
     # repeat calls on the SAME plan share one cache entry: the registry
     # must refresh recency, not grow (a duplicate row would make
     # eviction of the old row unpersist the new pin too)
@@ -2689,15 +2689,15 @@ def test_pin_registry_caps_and_releases(spark):
                                  "id long, v long")
     for _ in range(3):
         features.global_rank(same, ["v", "id"], n_parts=4).count()
-    assert len(features._PINNED) == 1
+    assert len(_materialize._PINNED) == 1
     # distinct plans: FIFO cap evicts the oldest MATERIALIZED pin
-    for j in range(features._PIN_CAP + 3):
+    for j in range(_materialize._PIN_CAP + 3):
         df = spark.createDataFrame([(i, i % 7) for i in range(40 + j)],
                                    "id long, v long")
         features.global_rank(df, ["v", "id"], n_parts=4).count()
-    assert len(features._PINNED) == features._PIN_CAP
-    features.release_pinned()
-    assert features._PINNED == []
+    assert len(_materialize._PINNED) == _materialize._PIN_CAP
+    _materialize.release_pinned()
+    assert _materialize._PINNED == []
 
 
 def test_minhash_cross_persisted_signature_table(spark, tmp_path):
@@ -2709,10 +2709,10 @@ def test_minhash_cross_persisted_signature_table(spark, tmp_path):
     side (its only shingle work is the candidate-pruned verify
     arrays). Runs at sf0.1 so the banded join has real bucket
     occupancy."""
-    from sparksync.ext import dedup, features
+    from sparksync.ext import _materialize, dedup
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     sf = "/root/testdata/sf0.1"
     docs = load_table(spark, sf, "documents")
     corpus = docs.where("doc_id % 5 != 0")
@@ -2750,7 +2750,7 @@ def test_minhash_cross_persisted_signature_table(spark, tmp_path):
         for ln in plan.splitlines()
         if "Scan" in ln or "Relation" in ln
     )
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_ols_by_group_exact_line(spark):
@@ -2824,9 +2824,9 @@ def test_vocab_growth_and_novelty(spark):
 def test_near_dup_cluster_keeper_transitive(spark):
     """A~B~C collapse to ONE cluster with ONE keeper (the highest
     quality, tie -> smallest id); the unrelated doc keeps itself."""
-    from sparksync.ext import dedup, features
+    from sparksync.ext import _materialize, dedup
 
-    features.release_pinned()
+    _materialize.release_pinned()
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
         (1, base, 50),
@@ -2842,7 +2842,7 @@ def test_near_dup_cluster_keeper_transitive(spark):
     # quality tie 80 between ids 2 and 3 -> smaller id kept
     assert (out[1].kept, out[2].kept, out[3].kept) == (0, 1, 0)
     assert out[4].cluster_id == 4 and out[4].kept == 1 and out[4].n_members == 1
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_zone_map_pruning_audit(spark):
@@ -3021,10 +3021,10 @@ def test_pin_registry_stays_bounded(spark):
     band pin adds one) keep the JVM's persistent-RDD registry bounded
     — the FIFO cap actually evicts materialized pins — and
     release_pinned() drains everything sparksync pinned."""
-    from sparksync.ext import dedup, features
+    from sparksync.ext import _materialize, dedup, features
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     jsc = spark.sparkContext._jsc
     base = jsc.getPersistentRDDs().size()
 
@@ -3037,10 +3037,10 @@ def test_pin_registry_stays_bounded(spark):
         dedup.minhash_dedup_pairs(docs2).write.format("noop").mode(
             "overwrite"
         ).save()
-    assert len(features._PINNED) <= features._PIN_CAP
-    assert jsc.getPersistentRDDs().size() <= base + features._PIN_CAP
-    features.release_pinned()
-    assert len(features._PINNED) == 0
+    assert len(_materialize._PINNED) <= _materialize._PIN_CAP
+    assert jsc.getPersistentRDDs().size() <= base + _materialize._PIN_CAP
+    _materialize.release_pinned()
+    assert len(_materialize._PINNED) == 0
 
 
 def test_pin_eviction_spares_unmaterialized(spark):
@@ -3052,27 +3052,68 @@ def test_pin_eviction_spares_unmaterialized(spark):
     materialized one is the eviction victim."""
     from pyspark import StorageLevel
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     dfs = [
         spark.range(100 + i).withColumnRenamed("id", "v")
-        for i in range(features._PIN_CAP + 4)
+        for i in range(_materialize._PIN_CAP + 4)
     ]
     for d in dfs:
-        features._pin(d)
+        _materialize._pin(d)
     # nothing materialized -> soft cap keeps every pin alive
-    assert len(features._PINNED) == features._PIN_CAP + 4
+    assert len(_materialize._PINNED) == _materialize._PIN_CAP + 4
     assert all(d.storageLevel != StorageLevel.NONE for d in dfs)
 
-    oldest = features._PINNED[0][0]
+    oldest = _materialize._PINNED[0][0]
     oldest.count()  # materialize only the oldest
-    features._pin(spark.range(7).withColumnRenamed("id", "w"))
+    _materialize._pin(spark.range(7).withColumnRenamed("id", "w"))
     assert oldest.storageLevel.useMemory is False  # evicted
     assert all(
         d is oldest or d.storageLevel.useMemory for d in dfs
     )  # the un-materialized pins all survived
-    features.release_pinned()
+    _materialize.release_pinned()
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_release_frees_pinned_persisted_and_checkpointed(spark):
+    """_release frees a DataFrame's blocks now, whichever kind holds
+    them: a pin (and its registry row), a caller-owned persist, and a
+    local checkpoint, whose blocks live on the RDD under its plan."""
+    from sparksync.ext import _materialize
+
+    _materialize.release_pinned()
+    base = _persistent_rdd_ids(spark)
+    pinned = _materialize._pin(spark.range(50).withColumnRenamed("id", "p"))
+    persisted = _materialize._persist(spark.range(55).withColumnRenamed("id", "q"))
+    ckpt = _materialize._checkpoint(spark.range(60).withColumnRenamed("id", "c"))
+    assert pinned.count() == 50 and persisted.count() == 55
+    added = _persistent_rdd_ids(spark) - base
+    assert len(added) == 3
+    assert any(d is pinned for d, _ in _materialize._PINNED)
+    for df in (pinned, persisted, ckpt):
+        _materialize._release(df)
+    assert added.isdisjoint(_persistent_rdd_ids(spark))
+    assert not any(d is pinned for d, _ in _materialize._PINNED)
+
+
+def test_lsh_scored_pairs_cache_released_by_release_pinned(spark):
+    """The projected (id, v, cells) relation _lsh_scored_pairs caches is
+    owned by the pin registry: after calls on distinct inputs,
+    release_pinned() leaves no persistent RDD behind."""
+    from sparksync.ext import _materialize
+
+    _materialize.release_pinned()
+    base = _persistent_rdd_ids(spark)
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    for i in range(3):
+        similarity._lsh_scored_pairs(emb.where(f"vec_id % 3 != {i}")).count()
+    assert _persistent_rdd_ids(spark) - base
+    _materialize.release_pinned()
+    assert _persistent_rdd_ids(spark) - base == set()
 
 
 def test_join_forecast_overflow_raises_loudly(spark):
@@ -5921,16 +5962,16 @@ def test_connected_components_n_edges_contract(spark, monkeypatch):
     it is pinned exactly once, and the labels are identical — on the
     driver-local path and on the distributed loop (a 16-chain runs
     past a lineage-truncation round)."""
-    from sparksync.ext import features, graph
+    from sparksync.ext import _materialize, graph
 
     pins = []
-    real_pin = features._pin
+    real_pin = _materialize._pin
 
     def counting_pin(df):
         pins.append(df)
         return real_pin(df)
 
-    monkeypatch.setattr(features, "_pin", counting_pin)
+    monkeypatch.setattr(_materialize, "_pin", counting_pin)
     rows = [(i, i + 1) for i in range(1, 16)] + [(40, 41), (41, 42)]
     lazy = spark.createDataFrame(rows, "d1 long, d2 long")
     ckpt = lazy.localCheckpoint(eager=True)
@@ -5950,7 +5991,7 @@ def test_connected_components_n_edges_contract(spark, monkeypatch):
         assert len(pins) == 1, cap
         assert got_ckpt == got_lazy, cap
         assert {c for _, c in got_lazy} == {1, 40}
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_connected_components_local_path_parity(spark, monkeypatch):
@@ -6711,7 +6752,7 @@ def test_global_cumsum_partition_by_matches_per_group_model(spark):
     straddle physical range partitions (forced via tiny n_parts)."""
     import random
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize, features
 
     rng = random.Random(14)
     rows = [
@@ -6733,7 +6774,7 @@ def test_global_cumsum_partition_by_matches_per_group_model(spark):
         for i, v in sub:
             c += v
             assert got[(g, i)] == c, (g, i)
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_recipe_mix_composition(spark):
@@ -6903,7 +6944,7 @@ def test_shuffle_order_is_deterministic_permutation(spark):
     order), and an unknown method raises."""
     import pytest as _pytest
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
     from sparksync.ext.sampling import BUCKETS, _KNUTH_A, shuffle_order
 
     ids = [3, 11, 7, 42, 100, 5, 777, 12, 9001, 2]
@@ -6912,11 +6953,11 @@ def test_shuffle_order_is_deterministic_permutation(spark):
     want_order = sorted(ids, key=lambda i: ((i * _KNUTH_A) % BUCKETS, i))
     want = {i: k + 1 for k, i in enumerate(want_order)}
     assert got == want
-    features.release_pinned()
+    _materialize.release_pinned()
     again = {r.doc_id: r.rank for r in shuffle_order(df, "doc_id").collect()}
     assert again == got
 
-    features.release_pinned()
+    _materialize.release_pinned()
     xx = {r.doc_id: r.rank for r in shuffle_order(
         df, "doc_id", method="xxhash64").collect()}
     assert sorted(xx.values()) == list(range(1, len(ids) + 1))
@@ -6924,7 +6965,7 @@ def test_shuffle_order_is_deterministic_permutation(spark):
 
     with _pytest.raises(ValueError, match="unknown hash method"):
         shuffle_order(df, "doc_id", method="md5")
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_length_bucket_packing_matches_python_model(spark):
@@ -6999,7 +7040,7 @@ def test_curriculum_stages_matches_sql_ntile(spark):
     k<1 raises."""
     import pytest as _pytest
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
     from sparksync.ext.sampling import curriculum_stages
 
     def py_ntile(n, k):
@@ -7016,7 +7057,7 @@ def test_curriculum_stages_matches_sql_ntile(spark):
     df = spark.createDataFrame(rows, "doc_id long, sig long")
     order = sorted((s, i) for i, s in rows if s is not None)
     for k in (1, 4, 5, 23, 40):
-        features.release_pinned()
+        _materialize.release_pinned()
         got = {
             r.doc_id: (r.rank, r.stage)
             for r in curriculum_stages(df, "sig", "doc_id", n_stages=k).collect()
@@ -7028,7 +7069,7 @@ def test_curriculum_stages_matches_sql_ntile(spark):
 
     with _pytest.raises(ValueError, match="n_stages"):
         curriculum_stages(df, "sig", "doc_id", n_stages=0)
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_curriculum_stages_rejects_reserved_names(spark):
@@ -7690,7 +7731,7 @@ def _column_simhash_pairs(
     df, max_hamming=dedup.SIMHASH_MAX_HAMMING, id_col="doc_id", text_col="text",
     bucket_cap=10_000, hash_fn=None,
 ):
-    from sparksync.ext.features import _pin
+    from sparksync.ext._materialize import _pin
 
     n_bands = max_hamming + 1
     width = dedup.SIMHASH_BITS // n_bands
@@ -7859,12 +7900,12 @@ def test_minhash_parsed_expressions(docs):
 
 
 def test_simhash_parsed_expressions(docs, monkeypatch):
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
     # simhash_pairs pins twice, and a pin probes every live registry
     # row: start from an empty registry so the budget measures
     # simhash_pairs itself, not the pins earlier tests left behind
-    monkeypatch.setattr(features, "_PINNED", [])
+    monkeypatch.setattr(_materialize, "_PINNED", [])
     fp = _build_within(600, lambda: dedup.simhash(docs))
     _same_plan_and_rows(fp, _column_simhash(docs))
     md5 = dedup.md5_token_hash
@@ -7875,7 +7916,7 @@ def test_simhash_parsed_expressions(docs, monkeypatch):
     old = _column_simhash_pairs(docs, bucket_cap=5)
     _same_plan_and_rows(pairs, old)
     assert pairs.count() > 0
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_lsh_scored_pairs_parsed_expressions(emb):

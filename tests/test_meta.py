@@ -1,6 +1,7 @@
 """Repo-hygiene meta-tests (VERDICT r5 #2/#3): every public extension
 function must be reachable from a gate query or a test (no dark code),
-no extension module reads the environment, and the committed selfcheck
+no extension module reads the environment, only _materialize.py
+persists or checkpoints, and the committed selfcheck
 sweep logs must cover exactly the registered query surface (the
 scale-reverification discipline cannot silently lapse again)."""
 
@@ -97,6 +98,30 @@ def test_ext_reads_no_environment():
                 continue
             hits += [f"{mod.name}:{node.lineno} {n}" for n in names]
     assert hits == [], f"environment reads in sparksync/ext: {hits}"
+
+
+def test_ext_materializes_only_through_materialize_module():
+    """Every persist, cache, checkpoint and unpersist in sparksync/ext/
+    goes through _materialize.py, and no other ext module names
+    StorageLevel: when and how an intermediate is materialized or
+    freed is decided in one module."""
+    calls = {"persist", "cache", "localCheckpoint", "checkpoint", "unpersist"}
+    hits = []
+    for mod in sorted(EXT.glob("*.py")):
+        if mod.name == "_materialize.py":
+            continue
+        for node in ast.walk(ast.parse(mod.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in calls
+            ):
+                hits.append(f"{mod.name}:{node.lineno} .{node.func.attr}()")
+            elif isinstance(node, ast.Name) and node.id == "StorageLevel":
+                hits.append(f"{mod.name}:{node.lineno} StorageLevel")
+            elif isinstance(node, ast.alias) and node.name == "StorageLevel":
+                hits.append(f"{mod.name} imports StorageLevel")
+    assert hits == [], f"materialization outside _materialize.py: {hits}"
 
 
 def _latest_sweep_logs():

@@ -616,10 +616,10 @@ def test_minhash_single_signature_pass(spark):
     read the band rows from cache (InMemoryTableScan) and keep exactly
     two live signature-side parquet scans: one under the cached
     relation, one for the verify-side shingle arrays."""
-    from sparksync.ext import dedup, features
+    from sparksync.ext import _materialize, dedup
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     docs = load_table(spark, SF_SMOKE, "documents")
     df = dedup.minhash_dedup_pairs(docs)
     df.write.format("noop").mode("overwrite").save()
@@ -631,7 +631,7 @@ def test_minhash_single_signature_pass(spark):
     # "partial_min((" is the signature min-agg; the verify stage's
     # partial_min_by is fine and must not trip this
     assert "partial_min((" not in live
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_round5_plus_queries_no_cartesian(spark):
@@ -643,9 +643,9 @@ def test_round5_plus_queries_no_cartesian(spark):
     hand-maintained list stopped at q187 and the round-7 additions
     shipped unguarded), so registering a new qNNN automatically
     enrolls it here."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     new_qs = sorted(
         q for q in QUERIES if int(q[1:].split("_", 1)[0]) >= 153
     )
@@ -655,7 +655,7 @@ def test_round5_plus_queries_no_cartesian(spark):
         assert "CartesianProduct" not in plan, q
     bloom = plan_of(QUERIES["q163_bloom_semi_audit"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in bloom
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_components_input_checkpoint_backed(spark):
@@ -721,10 +721,10 @@ def test_cluster_keeper_single_discovery_pass(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from sparksync.ext import dedup, features
+    from sparksync.ext import _materialize, dedup
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     docs = load_table(spark, SF_SMOKE, "documents")
     pairs = dedup.minhash_dedup_pairs(docs)
     n_pairs = pairs.count()
@@ -754,7 +754,7 @@ def test_cluster_keeper_single_discovery_pass(spark):
         f"discovery pipeline executed {acc.value / max(1, n_pairs):.1f} "
         "reads/pair (expected 1-2) - pair graph re-derived downstream"
     )
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_zorder_query_plans(spark):
@@ -765,13 +765,13 @@ def test_zorder_query_plans(spark):
     assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q198_zorder_pruning"](spark, SF_SMOKE))
     assert "rangepartitioning" in plan.lower()
     assert "CartesianProduct" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_dedup_report_single_discovery_pass(spark, monkeypatch):
@@ -787,10 +787,10 @@ def test_dedup_report_single_discovery_pass(spark, monkeypatch):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from sparksync.ext import dedup, features, graph
+    from sparksync.ext import _materialize, dedup, graph
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     docs = load_table(spark, SF_SMOKE, "documents")
     pairs = dedup.minhash_dedup_pairs(docs)
     n_pairs = pairs.count()
@@ -827,7 +827,7 @@ def test_dedup_report_single_discovery_pass(spark, monkeypatch):
         f"pair pipeline executed {acc.value / max(1, n_pairs):.1f} "
         "reads/pair (expected 1) - pair graph re-derived by a rollup"
     )
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_keeper_and_report_share_one_components_pass(spark, monkeypatch):
@@ -840,10 +840,10 @@ def test_keeper_and_report_share_one_components_pass(spark, monkeypatch):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from sparksync.ext import dedup, features, graph
+    from sparksync.ext import _materialize, dedup, graph
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     docs = load_table(spark, SF_SMOKE, "documents")
     raw = dedup.minhash_dedup_pairs(docs)
     n_pairs = raw.count()
@@ -897,7 +897,7 @@ def test_keeper_and_report_share_one_components_pass(spark, monkeypatch):
     k = {r.doc_id: r.cluster_id for r in keeper.collect() if r.n_members > 1}
     top = [r for r in report.collect() if r.section == "topline"][0]
     assert top.n2 == len(k)  # docs in clusters
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_run_engine_query_plans(spark):
@@ -908,9 +908,9 @@ def test_run_engine_query_plans(spark):
     small side by construction — test sets are thousands of docs, the
     corpus billions; a shuffle of the corpus against bench
     fingerprints would be the wrong plan at any scale)."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     p205 = plan_of(QUERIES["q205_shared_runs"](spark, SF_SMOKE))
     assert "LeftSemi" in p205 and "CartesianProduct" not in p205
     p206 = plan_of(QUERIES["q206_trim_shared_runs"](spark, SF_SMOKE))
@@ -923,7 +923,7 @@ def test_run_engine_query_plans(spark):
     p208 = plan_of(QUERIES["q208_decontaminate_trim"](spark, SF_SMOKE))
     assert "LeftSemi" in p208 and "CartesianProduct" not in p208
     assert "BroadcastHashJoin" in p208
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_decision_report_single_fingerprint_pass(spark, monkeypatch):
@@ -938,10 +938,10 @@ def test_decision_report_single_fingerprint_pass(spark, monkeypatch):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from sparksync.ext import dedup, features, graph
+    from sparksync.ext import _materialize, dedup, graph
     from sparksync.source import load_table
 
-    features.release_pinned()
+    _materialize.release_pinned()
     docs = load_table(spark, SF_SMOKE, "documents")
     raw = dedup.winnow_overlap_pairs(docs, k=5, w=8, min_shared=3)
     n_pairs = raw.count()
@@ -984,7 +984,7 @@ def test_decision_report_single_fingerprint_pass(spark, monkeypatch):
     # each size-s cluster contributes s-1 drops under BOTH rules (the
     # topline's min-id canonical and the keeper's max-quality pick)
     assert top.n3 == kept_drop
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_round13_new_queries_plan_shapes(spark):
@@ -996,7 +996,7 @@ def test_round13_new_queries_plan_shapes(spark):
     pruned sides share ONE materialization (unpinned, the plan read
     the source nine times — plan-audited r13) and joins its
     |queries|*k top-k sets broadcast, never sort-merge."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
     for q in ("q217_filter_attrition", "q218_epoch_recipe",
               "q220_packing_efficiency"):
@@ -1006,12 +1006,12 @@ def test_round13_new_queries_plan_shapes(spark):
         assert "SortMergeJoin" not in plan, q
         assert plan.count("SinglePartition") <= 1, q
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q219_ivf_recall"](spark, SF_SMOKE))
     assert plan.count("InMemoryTableScan") >= 8, "emb input not pinned"
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_signal_auc_one_scan_all_signals(spark):
@@ -1025,7 +1025,7 @@ def test_signal_auc_one_scan_all_signals(spark):
     InMemoryTableScan — one physical scan at cache build."""
     import re
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
     # clearCache, not just release_pinned: an earlier suite test can
     # leave the base documents relation cached, and its
@@ -1033,7 +1033,7 @@ def test_signal_auc_one_scan_all_signals(spark):
     # the exact == 2 count below needs a clean cache (full-suite order
     # dependence, caught in the round-14 final suite run)
     spark.catalog.clearCache()
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q221_signal_auc"](spark, SF_SMOKE))
     ids = {
         m.group(1)
@@ -1046,7 +1046,7 @@ def test_signal_auc_one_scan_all_signals(spark):
     assert plan.count("InMemoryTableScan") == 2
     assert "SortMergeJoin" not in plan
     assert "SinglePartition" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q222_recipe_mix_plan_shape(spark):
@@ -1078,9 +1078,9 @@ def test_round14_new_queries_plan_shapes(spark):
 
     import re
 
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q224_domain_reweight"](spark, SF_SMOKE))
     # the domains-sized aggregate is pinned; all its renders (the
     # group-by exchange above the parquet scan) must be the SAME
@@ -1100,7 +1100,7 @@ def test_round14_new_queries_plan_shapes(spark):
     # aggregates (prior count / min-max range / normalizer) over the
     # pinned domains-sized frame
     assert "BroadcastNestedLoopJoin" in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q225_q226_plan_shapes(spark):
@@ -1109,14 +1109,14 @@ def test_q225_q226_plan_shapes(spark):
     row_number with NO single-partition exchange over data; the
     length-bucket audit is one scan into a <=64-row aggregate plus a
     one-row broadcast max."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q225_shuffle_order"](spark, SF_SMOKE))
     assert "rangepartitioning" in plan
     assert "SinglePartition" not in plan
     assert "CartesianProduct" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
     plan = plan_of(QUERIES["q226_length_buckets"](spark, SF_SMOKE))
     # the <=64-row bucket aggregate is pinned: both consumers (corpus
@@ -1136,23 +1136,23 @@ def test_q225_q226_plan_shapes(spark):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("SinglePartition") <= 1  # the one-row corpus max
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q227_plan_shape(spark):
     """X224: the stage assignment rides global_rank's two-phase
     machinery — range partition + offset window, one broadcast
     count; NEVER a single-partition sort over the corpus."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q227_curriculum_stages"](spark, SF_SMOKE))
     assert "rangepartitioning" in plan
     # the ONE allowed tiny exchange is the one-row total-count
     # aggregate the stage arithmetic broadcasts
     assert plan.count("SinglePartition") <= 1
     assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q230_plan_shape(spark):
@@ -1161,14 +1161,14 @@ def test_q230_plan_shape(spark):
     no join of any kind, no single-partition exchange (the train half
     that produced the merges ran before this plan was built, its cost
     measured separately by q228)."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q230_bpe_segment"](spark, SF_SMOKE))
     assert plan.count("Exchange") == 1  # the vocabulary groupBy, hash
     assert "SinglePartition" not in plan
     assert "Join" not in plan and "CartesianProduct" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q231_q232_plan_shapes(spark):
@@ -1177,9 +1177,9 @@ def test_q231_q232_plan_shapes(spark):
     cartesian, ZERO single-partition exchanges; the ADC read path is
     broadcast table lookups ending in TakeOrderedAndProject top-k
     (never a global sort)."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q231_pq_encode"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
@@ -1188,7 +1188,7 @@ def test_q231_q232_plan_shapes(spark):
     assert "TakeOrderedAndProject" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q233_q234_plan_shapes(spark):
@@ -1201,9 +1201,9 @@ def test_q233_q234_plan_shapes(spark):
     pins its input (InMemoryTableScan on both sides) and runs
     all-broadcast. Neither plans a cartesian or a single-partition
     exchange."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q233_ivf_pq"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan
     assert plan.count("SortMergeJoin") <= 1
@@ -1219,7 +1219,7 @@ def test_q233_q234_plan_shapes(spark):
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
     assert plan.count("InMemoryTableScan") >= 2  # the pinned projection
-    features.release_pinned()
+    _materialize.release_pinned()
 
 
 def test_q229_plan_shape(spark):
@@ -1229,11 +1229,11 @@ def test_q229_plan_shape(spark):
     stage_rank — ZERO single-partition exchanges (no global sort, no
     per-stage corpus/k window task), no sort-merge join, no cartesian
     (probed at build time: 0 SinglePartition on the executed plan)."""
-    from sparksync.ext import features
+    from sparksync.ext import _materialize
 
-    features.release_pinned()
+    _materialize.release_pinned()
     plan = plan_of(QUERIES["q229_curriculum_order"](spark, SF_SMOKE))
     assert "rangepartitioning" in plan
     assert "SinglePartition" not in plan
     assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
-    features.release_pinned()
+    _materialize.release_pinned()

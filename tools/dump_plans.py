@@ -1,10 +1,9 @@
 """Dump `.explain("formatted")` for declared queries to
-plans/<tag>/<query>_<suffix>.txt (optimization-round evidence: the
-judge cannot run Spark, so every plan claim in OPTIMIZATION_r15.md
-must be checkable against these committed files).
+<outdir>/<query>_<suffix>.txt, so a plan claim can be checked against
+the plan text (the default outdir, .plans/, is gitignored).
 
 Usage: python tools/dump_plans.py [--suffix before|after]
-                                  [--outdir plans/r15]
+                                  [--outdir .plans]
                                   [--sf-dir DIR] [query ...]
 
 Default query set: the bench HEADLINE list (the timed surface).
@@ -30,7 +29,7 @@ def main(argv: list[str] | None = None) -> int:
 
     ap = argparse.ArgumentParser(prog="dump_plans.py")
     ap.add_argument("--suffix", default="before")
-    ap.add_argument("--outdir", default="plans/r15")
+    ap.add_argument("--outdir", default=".plans")
     ap.add_argument(
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
