@@ -1,13 +1,17 @@
 """Source<->target verification.
 
 The reference's compareDb is per-table count(*) equality with goroutines
-appending to an unsynchronized slice (/root/reference/cmd/compare.go:102-132
-— SURVEY notes the data race at compare.go:15,130). We keep the count
+appending to an unsynchronized slice (reference cmd/compare.go:102-132;
+SURVEY notes the data race at compare.go:15,130). We keep the count
 mode and add two stronger modes the reference lacks:
 
-- checksum: order-insensitive full-row digest (count + min/max sha2 +
-  xor-folded hash) — one shuffle-free aggregate per side; scales to any
-  row count because nothing is collected but a single row per table.
+- checksum: order-insensitive full-row digest — count, min/max of a
+  per-row xxhash64 and an exact decimal(38,0) sum of it. The row hash
+  reads each column's native value plus an is-null marker; a column is
+  rendered to string only where the two sides disagree on its type, or
+  when it is an array, map, struct or variant. One shuffle-free aggregate
+  per side; scales to any row count because nothing is collected but a
+  single row per table.
 - diff: exceptAll both ways — exact row-level delta, shuffle-heavy, for
   drill-down after a checksum mismatch.
 """
@@ -18,6 +22,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType, VariantType
 
 from .session import local_frame
 
@@ -38,41 +43,53 @@ class CompareResult:
         return ok
 
 
-def _row_digest(df: DataFrame, algo: str = "xxhash64") -> F.Column:
-    """Per-row digest over all columns rendered to string; NULLs render
-    as a sentinel so (NULL,'a') != ('a',NULL).
-
-    algo='xxhash64' (default): non-cryptographic, ~3x faster per scan —
-    the right trade for corruption/equality checking at 100 TB.
-    algo='sha2' when an adversarial-collision-resistant digest is
-    required (and for parity with external sha256 implementations)."""
-    cols = [F.coalesce(F.col(c).cast("string"), F.lit(chr(0))) for c in df.columns]
-    if algo == "xxhash64":
-        return F.xxhash64(*cols)
-    return F.sha2(F.concat_ws("\x1f", *cols), 256)
+def _col(name: str) -> F.Column:
+    """A column by its literal name: `a.b` is a column, not a struct field."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
-def table_checksum(df: DataFrame, algo: str = "xxhash64") -> dict:
-    """Order-insensitive digest: count + min/max of per-row digest + a
-    commutative decimal(38,0) fold. A single partial-aggregable pass —
-    at 100 TB this is one map-side combine + a 1-row reduce, no shuffle
-    of data rows. The digest is computed ONCE in a projection and both
-    the extremes and the fold derive from that column — never hand the
-    aggregate two copies of the hash expression and hope codegen
-    dedupes them (hashing every row twice is the dominant cost here)."""
-    proj = df.select(_row_digest(df, algo).alias("_h"))
-    fold = (
-        F.col("_h").cast("decimal(38,0)")
-        if algo == "xxhash64"
-        else F.conv(F.substring("_h", 1, 15), 16, 10).cast("decimal(38,0)")
-    )
-    row = proj.select(
-        F.count(F.lit(1)).alias("cnt"),
-        F.min("_h").alias("hmin"),
-        F.max("_h").alias("hmax"),
-        F.sum(fold).alias("hsum"),
-    ).collect()[0]
-    return {"cnt": row["cnt"], "hmin": row["hmin"], "hmax": row["hmax"], "hsum": row["hsum"]}
+def _string_positions(src: DataFrame, dst: DataFrame) -> frozenset[int]:
+    """Positions whose data types differ between the two sides (every
+    position when the column counts differ): the columns both sides
+    must hash as rendered strings to stay comparable."""
+    s, d = src.schema.fields, dst.schema.fields
+    if len(s) != len(d):
+        return frozenset(range(max(len(s), len(d))))
+    return frozenset(i for i, (a, b) in enumerate(zip(s, d)) if a.dataType != b.dataType)
+
+
+def _row_digest(df: DataFrame, as_string: frozenset[int]) -> F.Column:
+    """Per-row xxhash64 over every column of `df`, in order. Column i
+    contributes two cells: its native value, then isnull(value).
+    xxhash64 skips NULL cells, so the marker is what keeps (NULL,'a')
+    apart from ('a',NULL) and '\\x00' apart from NULL; it is there on
+    every column, because nullability differs between, say, a parquet
+    source and a JDBC read-back. Column i is rendered to string first
+    when i is in `as_string` (the two sides disagree on its type), when
+    it is not an atomic type (the native array hash skips NULL elements,
+    so [NULL,1] would hash like [1,NULL]), or when it is a VARIANT,
+    which xxhash64 rejects."""
+    cells = []
+    for i, f in enumerate(df.schema.fields):
+        c = _col(f.name)
+        native = isinstance(f.dataType, AtomicType) and not isinstance(f.dataType, VariantType)
+        cells += [c if native and i not in as_string else c.cast("string"), c.isNull()]
+    return F.xxhash64(*cells)
+
+
+def table_checksum(df: DataFrame, as_string: frozenset[int] = frozenset()) -> dict:
+    """Order-insensitive digest {cnt, hmin, hmax, hsum}: count + min/max
+    of the per-row digest + its commutative decimal(38,0) sum, which
+    catches an in-place update that keeps the count and the extremes.
+    Each row's input is its native values plus one is-null marker per
+    column, with the columns at `as_string` (and non-atomic or variant
+    ones) rendered to string — see _row_digest — so two frames digest equal
+    only if their columns line up by position. This is
+    partition_checksums with no partition columns: one projection
+    hashes each row once and all four aggregates read it, in a single
+    partial-aggregable pass — at 100 TB one map-side combine + a 1-row
+    reduce, no shuffle of data rows."""
+    return partition_checksums(df, [], as_string=as_string).collect()[0].asDict()
 
 
 def compare_counts(src: DataFrame, dst: DataFrame, table: str) -> CompareResult:
@@ -88,9 +105,10 @@ def compare_checksum(src: DataFrame, dst: DataFrame, table: str) -> CompareResul
     this overlaps the two sides WITHIN one table."""
     from concurrent.futures import ThreadPoolExecutor
 
+    as_string = _string_positions(src, dst)
     with ThreadPoolExecutor(max_workers=2) as ex:
-        fs = ex.submit(table_checksum, src)
-        fd = ex.submit(table_checksum, dst)
+        fs = ex.submit(table_checksum, src, as_string)
+        fd = ex.submit(table_checksum, dst, as_string)
         cs, cd = fs.result(), fd.result()
     return CompareResult(
         table=table,
@@ -257,38 +275,40 @@ def snapshots_at(
 
 
 def partition_checksums(
-    df: DataFrame, part_cols: list[str], algo: str = "xxhash64"
+    df: DataFrame,
+    part_cols: list[str],
+    algo: str = "xxhash64",
+    as_string: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    """Per-partition digests: (part_cols..., cnt, hmin, hmax) in ONE
-    partial-aggregable pass. Comparing these between source and target
-    localizes a mismatch to the partitions that actually changed, so an
-    incremental re-sync moves only those — the difference between
-    re-verifying 100 TB and re-verifying one day's slice. algo='md5' is
-    bit-portable across engines (used by the oracle-checked gate)."""
-    data_cols = [c for c in df.columns if c not in part_cols]
-    cells = [F.coalesce(F.col(c).cast("string"), F.lit(chr(0))) for c in data_cols]
+    """Per-partition digests: (part_cols..., cnt, hmin, hmax, hsum) in
+    ONE partial-aggregable pass. Comparing these between source and
+    target localizes a mismatch to the partitions that actually
+    changed, so an incremental re-sync moves only those — the
+    difference between re-verifying 100 TB and re-verifying one day's
+    slice. algo='xxhash64' hashes the data columns with _row_digest
+    (`as_string` indexes the data columns); algo='md5' digests the
+    string-rendered cells and is bit-portable across engines (used by
+    the oracle-checked gate)."""
+    data = df.drop(*part_cols)
+    if algo == "md5":
+        cells = [F.coalesce(_col(c).cast("string"), F.lit(chr(0))) for c in data.columns]
+        raw = F.md5(F.concat_ws("\x1f", *cells))
+        fold = F.conv(F.substring("_raw", 1, 15), 16, 10)
+    else:
+        raw = _row_digest(data, as_string)
+        fold = F.col("_raw")
     # hash once in a projection; extremes and the commutative fold both
-    # derive from the single "_h" column (two hash expressions in the
+    # derive from the single "_raw" column (two hash expressions in the
     # aggregate would hash every row twice). The fold matters: min/max
     # alone miss an in-place update that keeps cnt and doesn't move the
     # extremes (prob ~2/n) — the sum of per-row digests changes whenever
     # ANY row's content changes.
-    if algo == "xxhash64":
-        raw = F.xxhash64(*cells)
-        proj = df.select(*part_cols, raw.alias("_raw"))
-        h = F.col("_raw").cast("string")
-        fold = F.col("_raw").cast("decimal(38,0)")
-    else:
-        concat = F.concat_ws("\x1f", *cells)
-        raw = F.md5(concat) if algo == "md5" else F.sha2(concat, 256)
-        proj = df.select(*part_cols, raw.alias("_raw"))
-        h = F.col("_raw")
-        fold = F.conv(F.substring("_raw", 1, 15), 16, 10).cast("decimal(38,0)")
+    proj = df.select(*part_cols, raw.alias("_raw"))
     return proj.groupBy(*part_cols).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.min(h).alias("hmin"),
-        F.max(h).alias("hmax"),
-        F.sum(fold).alias("hsum"),
+        F.min("_raw").alias("hmin"),
+        F.max("_raw").alias("hmax"),
+        F.sum(fold.cast("decimal(38,0)")).alias("hsum"),
     )
 
 
@@ -297,8 +317,9 @@ def changed_partitions(
 ) -> DataFrame:
     """Partition keys whose digests disagree (or exist on one side
     only) — the work list for an incremental re-sync."""
-    s = partition_checksums(src, part_cols, algo)
-    d = partition_checksums(dst, part_cols, algo)
+    as_string = _string_positions(src.drop(*part_cols), dst.drop(*part_cols))
+    s = partition_checksums(src, part_cols, algo, as_string)
+    d = partition_checksums(dst, part_cols, algo, as_string)
     # eqNullSafe: a NULL partition key groups on each side and must MATCH
     # across the join (plain = would flag a null-keyed partition as changed
     # on every run even when identical).

@@ -247,9 +247,11 @@ ORACLE_Q09 = "\nunion all\n".join(
 
 
 def q10_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """compare.py's order-insensitive digest (count + min/max row sha2)
-    on three tables — the row-level strengthening of EP2. One
-    partial-aggregable pass per table, no row shuffle."""
+    """An order-insensitive digest in the shape of compare.py's checksum
+    (count + min/max of a per-row hash) on three tables — the row-level
+    strengthening of EP2. It builds its own sha2 over '|'-joined string
+    cells, not compare.py's xxhash64, so DuckDB can replay it exactly.
+    One partial-aggregable pass per table, no row shuffle."""
     parts = []
     specs = {
         "region": ["r_regionkey", "r_name"],

@@ -4,7 +4,11 @@ semantics; DDL dump; config parsing; fixture catalog."""
 
 from __future__ import annotations
 
+import datetime
 import os
+import re
+
+import pytest
 
 from sparksync.catalog import FixtureCatalog
 from sparksync.compare import compare_checksum, row_diff
@@ -41,6 +45,96 @@ def test_checksum_detects_row_loss(spark, tmp_path):
     assert not res.is_ok
     missing, extra = row_diff(job.source.read("supplier"), bad)
     assert missing.count() == 1 and extra.count() == 0
+
+
+_ROWS = [(1, "a"), (2, "b"), (3, "c")]
+_TS = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
+
+
+@pytest.mark.parametrize(
+    "src_rows, src_schema, dst_rows, dst_schema, ok",
+    [
+        pytest.param([(1, None, "x")], "k int, a string, b string",
+                     [(1, "x", None)], "k int, a string, b string", False,
+                     id="null-moved-to-other-column"),
+        pytest.param([(1, chr(0))], "k int, s string",
+                     [(1, None)], "k int, s string", False, id="nul-char-vs-null"),
+        pytest.param(_ROWS, "k int, s string", _ROWS[:2], "k int, s string", False,
+                     id="missing-row"),
+        pytest.param(_ROWS, "k int, s string", _ROWS + _ROWS[-1:], "k int, s string",
+                     False, id="duplicated-row"),
+        pytest.param([(1, 1.5), (2, 2.5)], "k int, d double",
+                     [(1, 1.5), (2, 2.5000000000000004)], "k int, d double", False,
+                     id="changed-double"),
+        pytest.param([(1, _TS)], "k int, t timestamp",
+                     [(1, _TS + datetime.timedelta(microseconds=1))], "k int, t timestamp",
+                     False, id="changed-timestamp"),
+        pytest.param([(1, [None, 1])], "k int, a array<int>",
+                     [(1, [1, None])], "k int, a array<int>", False,
+                     id="array-null-position"),
+        pytest.param([(1, 10), (2, None)], "k int, v int",
+                     [(1, 10), (2, None)], "k int, v bigint", True, id="int-vs-bigint"),
+        pytest.param([(1, _TS)], "k int, t timestamp_ntz",
+                     [(1, _TS)], "k int, t timestamp", True, id="ntz-vs-ltz-utc"),
+    ],
+)
+def test_compare_checksum_cases(spark, src_rows, src_schema, dst_rows, dst_schema, ok):
+    """Each case is a small source/destination pair: the changed ones
+    must fail the checksum, the type-drifted but equal ones must pass
+    (the string rendering both sides fall back to under UTC)."""
+    src = spark.createDataFrame(src_rows, src_schema)
+    dst = spark.createDataFrame(dst_rows, dst_schema)
+    r = compare_checksum(src, dst, "t")
+    assert r.checksum_ok is ok and r.is_ok is ok
+
+
+def test_checksum_renders_variant_columns(spark):
+    """xxhash64 rejects VARIANT input, so a variant column is hashed as
+    its rendered JSON: equal values compare OK, a changed one does not."""
+    df = spark.sql("""select 1 as k, parse_json('{"a":1}') as v""")
+    changed = spark.sql("""select 1 as k, parse_json('{"a":2}') as v""")
+    assert compare_checksum(df, df, "t").is_ok
+    assert compare_checksum(df, changed, "t").checksum_ok is False
+
+
+def test_checksum_takes_column_names_literally(spark):
+    """A column named `a.b` is hashed as a column, not resolved as field
+    b of a struct a (which raised and made compare_phase report the
+    destination missing)."""
+    from sparksync.compare import changed_partitions, partition_checksums, table_checksum
+
+    df = spark.createDataFrame([(1, "x", 0), (2, None, 0)], "`a.b` int, c string, p int")
+    assert table_checksum(df)["cnt"] == 2
+    assert compare_checksum(df, df, "t").is_ok
+    for algo in ("xxhash64", "md5"):
+        assert partition_checksums(df, ["p"], algo).collect()[0]["cnt"] == 2
+        assert changed_partitions(df, df, ["p"], algo).count() == 0
+
+
+def test_checksum_plan_hashes_native_values(spark, monkeypatch):
+    """Guard on the cost: over lineitem (atomic columns, the same types
+    on both sides) the analyzed plan table_checksum runs renders no
+    column to string; one type-mismatched column renders exactly that
+    one."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from sparksync.compare import _string_positions, table_checksum
+    from sparksync.source import load_table
+
+    collected = []
+    collect = DataFrame.collect
+    monkeypatch.setattr(DataFrame, "collect", lambda self: collected.append(self) or collect(self))
+
+    def plan_of(src, dst) -> str:
+        table_checksum(src, _string_positions(src, dst))
+        return collected[-1]._jdf.queryExecution().analyzed().toString()
+
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    assert " as string)" not in plan_of(li, li)
+    plan = plan_of(li, li.withColumn("l_linenumber", F.col("l_linenumber").cast("string")))
+    assert plan.count(" as string)") == 1
+    assert re.search(r"cast\(l_linenumber#\w+ as string\)", plan)
 
 
 def test_empty_table_synced_and_created(spark, tmp_path):
